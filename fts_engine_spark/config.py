@@ -22,7 +22,6 @@ import dataclasses
 import json
 import os
 from dataclasses import dataclass, field
-from functools import partial
 
 from .textproc import pipeline as tp
 
@@ -30,9 +29,9 @@ VALID_SCORERS = ("bm25", "reference")
 VALID_MODES = ("wand", "relational")
 VALID_PRESETS = ("english", "russian", "multilingual", "default", "simple", "by_lang")
 # filter factory enum (reference: none|bloom|cuckoo|ribbon, config.go:206);
-# the storage-layer paths (dict/storage/none) plus the compact driver-side
+# the storage-layer paths (dict/storage) plus the compact driver-side
 # cuckoo/ribbon term gates (operators/filters.py; SURVEY.md §2.5 F2-F4, F7)
-VALID_PRUNING = ("dict", "storage", "none", "cuckoo", "ribbon")
+VALID_PRUNING = ("dict", "storage", "cuckoo", "ribbon")
 
 
 @dataclass
@@ -184,33 +183,7 @@ def load_config(
     return validate(cfg), source
 
 
-def pipeline_from_flags(flags: PipelineFlags) -> tp.Pipeline:
-    """Assemble a pipeline in the reference's filter order
-    (``buildPipeline``, cmd/fts/main.go:562-590)."""
-    filters = []
-    if flags.lowercase:
-        filters.append(tp.lowercase_filter)
-    if flags.min_length > 0:
-        filters.append(partial(tp.min_length_filter, min_length=flags.min_length))
-    if flags.stopwords_en:
-        filters.append(tp.english_stopword_filter)
-    if flags.stopwords_ru:
-        filters.append(tp.russian_stopword_filter)
-    if flags.stem_en:
-        filters.append(tp.english_stem_filter)
-    if flags.stem_ru:
-        filters.append(tp.russian_stem_filter)
-    return tp.Pipeline("custom", tuple(filters))
-
-
-def resolve_pipeline(cfg: EngineFileConfig) -> str:
-    """Preset name when set ('by_lang' is handled by the build routing);
-    otherwise the canonical ``custom:`` spec string assembled from the flags
-    — a string so it travels through UDF closures and engine options
-    (``get_pipeline`` accepts both forms)."""
-    if cfg.preset:
-        return cfg.preset
-    f = cfg.pipeline
+def _flags_spec(f: PipelineFlags) -> str:
     return tp.custom_spec(
         lowercase=f.lowercase,
         min_length=f.min_length,
@@ -219,3 +192,19 @@ def resolve_pipeline(cfg: EngineFileConfig) -> str:
         stem_en=f.stem_en,
         stem_ru=f.stem_ru,
     )
+
+
+def pipeline_from_flags(flags: PipelineFlags) -> tp.Pipeline:
+    """Assemble a pipeline in the reference's filter order
+    (``buildPipeline``, cmd/fts/main.go:562-590) — the ``custom:`` spec
+    chain, named by its spec so the token memo cannot confuse it with
+    another flag set."""
+    return tp.get_pipeline(_flags_spec(flags))
+
+
+def resolve_pipeline(cfg: EngineFileConfig) -> str:
+    """Preset name when set ('by_lang' is handled by the build routing);
+    otherwise the canonical ``custom:`` spec string assembled from the flags
+    — a string so it travels through UDF closures and engine options
+    (``get_pipeline`` accepts both forms)."""
+    return cfg.preset or _flags_spec(cfg.pipeline)

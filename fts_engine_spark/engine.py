@@ -36,7 +36,7 @@ class EngineOptions:
     n_waves: int = 1
     scorer: str = "bm25"  # 'bm25' | 'reference'
     mode: str = "wand"  # 'wand' | 'relational'
-    pruning: str = "dict"  # 'dict' | 'storage' | 'none' (operators.pruning)
+    pruning: str = "dict"  # 'dict' | 'storage' | 'cuckoo' | 'ribbon' (operators.pruning)
     bloom_ndv: int = 1 << 16
     k: int = 10
     # build the positional table (index-only phrase queries, positions.py)
@@ -749,10 +749,7 @@ class FtsEngine:
 
     # ---- ContainsNormalized (filter_normalize.go:31-52): ALL keys present
     def contains_normalized(self, text: str, preset: str | None = None) -> bool:
-        preset = preset or (
-            "multilingual" if self.index.preset == "by_lang" else self.index.preset
-        )
-        keys = set(normalize_query(text, preset))
+        keys = set(normalize_query(text, self.index._query_preset(preset)))
         if not keys:
             return False
         stats = self.index.term_stats(list(keys))

@@ -114,11 +114,8 @@ class FederatedFtsIndex:
         on snapshot A's vocabulary would false-negative terms that only
         snapshot B contains. Presence is decided per sub by its own
         term_stats lookup instead."""
-        preset = preset or (
-            "multilingual" if self.preset == "by_lang" else self.preset
-        )
         mult: dict[str, int] = {}
-        for t in normalize_query(query, preset):
+        for t in normalize_query(query, self.subs[0]._query_preset(preset)):
             mult[t] = mult.get(t, 0) + 1
         return mult
 
@@ -277,12 +274,7 @@ class FederatedFtsIndex:
                 ).collect()
             ]
 
-        if any(
-            s._point_cache is None
-            or s._term_dict is None
-            or s.n_deleted > s.dead_broadcast_max
-            for s in self.subs
-        ):
+        if not all(s._point_ready() for s in self.subs):
             return _fallback()
         if min_match is not None and conjunctive:
             raise ValueError("pass either conjunctive or min_match, not both")
@@ -314,11 +306,9 @@ class FederatedFtsIndex:
             return []
         # budget gate on the SUB-LOCAL df (that is what gets cached): any
         # oversized posting list routes the whole query distributed, same
-        # rule as the single-index tier (search_bm25_point's df cap)
-        for sub, stats in zip(self.subs, sub_stats):
-            cap = sub._point_max_bytes // 40
-            if any(int(df_) > cap for _, (df_, _cf) in stats.items()):
-                return _fallback()
+        # rule as the single-index tier
+        if not all(s._point_fits(lookup) for s in self.subs):
+            return _fallback()
 
         merged: list[tuple[float, str, str]] = []
         for sub, stats in zip(self.subs, sub_stats):

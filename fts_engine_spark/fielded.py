@@ -254,13 +254,10 @@ class FieldedIndex:
         if mode not in MODES:
             raise ValueError(f"mode must be one of {MODES}, got {mode!r}")
         if mode == "cross_fields":
-            return [
-                (int(r["doc_id"]), float(r["score"]))
-                for r in self.search(
-                    query, k=k, weights=weights, mode=mode,
-                    tie_breaker=tie_breaker,
-                ).collect()
-            ]
+            return FtsIndex._point_rows(self.search(
+                query, k=k, weights=weights, mode=mode,
+                tie_breaker=tie_breaker,
+            ))
         w = self._weights(weights)
         per = {
             name: dict(self.indexes[name].search_bm25_point(query, k=0))

@@ -173,19 +173,12 @@ def more_like_this_point(
     from ..stored import stored_rows_local
 
     def fallback() -> list[tuple[int, float]]:
-        return [
-            (int(r["doc_id"]), float(r["score"]))
-            for r in more_like_this(
-                index, doc_id=doc_id, k=k, max_terms=max_terms,
-                min_tf=min_tf, min_df=min_df, preset=preset,
-            ).collect()
-        ]
+        return index._point_rows(more_like_this(
+            index, doc_id=doc_id, k=k, max_terms=max_terms,
+            min_tf=min_tf, min_df=min_df, preset=preset,
+        ))
 
-    if (
-        index._point_cache is None
-        or index._term_dict is None
-        or index.n_deleted > index.dead_broadcast_max
-    ):
+    if not index._point_ready():
         return fallback()
     rows = stored_rows_local(index, [doc_id])
     if doc_id not in rows:
@@ -196,15 +189,10 @@ def more_like_this_point(
     )
     if not terms:
         return []
-    present = {
-        t: (1, index._term_dict[t][0])
-        for t in terms
-        if t in index._term_dict
-    }
+    present = index._point_present(dict.fromkeys(terms, 1))
     if not present:
         return []
-    df_cap = index._point_max_bytes // 40
-    if any(df_ > df_cap for _, df_ in present.values()):
+    if not index._point_fits(present):
         return fallback()
     k_inner = k + 1 if k > 0 else 0
     hits = index._point_sweep(present, k_inner, 0)

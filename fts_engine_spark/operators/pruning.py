@@ -15,9 +15,6 @@ storage layer — HOW a term predicate reaches the postings scan:
               bloom filter written at build time (build.py) prune the scan;
               no dictionary lookup. The closest analogue of "bloom filter
               in front of the index".
-- ``none``    no predicate at all (full scan + join) — the reference's
-              ``filter: none``; for debugging and for measuring what the
-              pruning saves.
 
 query-term gate layer — the reference's cuckoo/ribbon filters as COMPACT
 driver-side gates (operators/filters.py), for serving tiers that cannot
@@ -40,7 +37,7 @@ from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, functions as F
 
-STRATEGIES = ("dict", "storage", "none", "cuckoo", "ribbon")
+STRATEGIES = ("dict", "storage", "cuckoo", "ribbon")
 
 
 def make_pruner(strategy: str = "dict"):
@@ -60,8 +57,8 @@ def make_pruner(strategy: str = "dict"):
     state = {"filter": None}
 
     def prune(df: DataFrame, terms: list[str]) -> DataFrame:
-        if strategy == "none" or not terms:
-            return df
+        # every strategy scans exactly the query's terms (none for an
+        # empty list), so decode kernels never see a non-query term
         return df.where(F.col("term").isin(list(terms)))
 
     def fit(vocab: Iterable[str]) -> None:

@@ -39,10 +39,9 @@ def _tokens(index, query: str, preset: str | None) -> list[str]:
     """Normalized tokens, dictionary gate BYPASSED (a misspelling is
     precisely a term the gate rejects), duplicates dropped, input order
     kept."""
-    preset = preset or (
-        "multilingual" if index.preset == "by_lang" else index.preset
+    return list(
+        dict.fromkeys(normalize_query(query, index._query_preset(preset)))
     )
-    return list(dict.fromkeys(normalize_query(query, preset)))
 
 
 def suggest_terms(

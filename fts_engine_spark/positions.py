@@ -614,16 +614,16 @@ def _phrase_sequences(index: "FtsIndex", phrase: str) -> dict[str, list[str]]:
 
 
 def _phrase_prefix_variants(
-    index: "FtsIndex", phrase: str, expander, max_expansions: int
+    index: "FtsIndex", phrase: str, max_expansions: int, point: bool = False
 ) -> dict[str, list[list[str]]]:
     """pipeline -> concrete sequence variants for a phrase-prefix query
     (ES ``match_phrase_prefix``): the LAST whitespace token of ``phrase``
     is a dictionary prefix (an optional trailing ``*`` is accepted and
     stripped), the head analyzes like a normal phrase. Follows the
-    repo's established multi-term-rewrite semantics (``_prefix_mult``):
+    repo's established multi-term-rewrite semantics (``_rewrite_mult``):
     the pattern is Go-lowered and expanded against the POST-PIPELINE
-    dictionary — never stemmed — via ``expander(pattern, n)`` (the
-    distributed ``expand_terms`` or the driver-side ``_point_expand``,
+    dictionary — never stemmed — via ``index._expand`` (the distributed
+    ``expand_terms``, or the driver-side ``_point_expand`` when ``point``;
     both df-desc/term-asc deterministic). Unlike ``_phrase_sequences``,
     a head that analyzes to NOTHING keeps the pipeline with an empty
     fixed part (the query degrades to a counted prefix term — ES
@@ -639,7 +639,9 @@ def _phrase_prefix_variants(
     if not pat or pat == "*":
         return {}
     head = " ".join(toks[:-1])
-    expansions = expander(go_lower(pat), max_expansions)
+    expansions = index._expand(
+        go_lower(pat), "prefix", max_expansions, point=point
+    )
     if not expansions:
         return {}
     from .query import normalize_query
@@ -745,12 +747,7 @@ def search_phrase_prefix_positional(
     deterministic df-desc/term-asc top-``max_expansions`` (one bounded
     dictionary job), then ONE positional job runs every variant over
     the same pruned scan of fixed-terms ∪ expansions rows."""
-    variants = _phrase_prefix_variants(
-        index,
-        phrase,
-        lambda pat, n: index.expand_terms(pat, "prefix", max_expand=n),
-        max_expansions,
-    )
+    variants = _phrase_prefix_variants(index, phrase, max_expansions)
     return _search_positional(
         index, phrase, k, phrase_match_kernel, "phrase_count",
         seq_variants=variants if variants else {},

@@ -54,6 +54,21 @@ from .textproc.pipeline import get_pipeline
 K1 = 1.2
 B = 0.75
 
+# point-tier admission: a cached posting costs ~20 B (blobs + skip arrays +
+# the 16 B decode cache) and one term may fill at most half the budget, so
+# a term whose df exceeds budget / 40 streams through the distributed path
+_POINT_BUDGET_BYTES_PER_POSTING = 40
+
+# multi-term rewrite token syntax: kind -> (is a pattern token, pattern body)
+_REWRITE_TOKENS = {
+    "prefix": (lambda t: len(t) > 1 and t.endswith("*"), lambda t: t[:-1]),
+    "wildcard": (lambda t: len(t) > 1 and ("*" in t or "?" in t), lambda t: t),
+    "regexp": (
+        lambda t: len(t) > 2 and t.startswith("/") and t.endswith("/"),
+        lambda t: t[1:-1],
+    ),
+}
+
 DECODED_SCHEMA = StructType(
     [
         StructField("term", StringType(), False),
@@ -473,15 +488,21 @@ class FtsIndex:
         )
         return {r["term"]: (r["df"], r["cf"]) for r in rows}
 
+    def _query_preset(self, preset: str | None) -> str:
+        """Query-side pipeline: the caller's, else the index's (a by_lang
+        index analyzes queries with the multilingual chain)."""
+        return preset or (
+            "multilingual" if self.preset == "by_lang" else self.preset
+        )
+
     def _query_mult(self, query: str, preset: str | None = None) -> dict[str, int]:
         """Normalized query tokens with multiplicity (duplicates kept,
         engine.go:91), gated through the probabilistic term filter when one
         is selected (the reference's filter-before-index role,
         engine.go:108-116). Driver-side, no Spark job (the cuckoo/ribbon
         gate is built once, lazily, from the terms table)."""
-        preset = preset or ("multilingual" if self.preset == "by_lang" else self.preset)
         mult: dict[str, int] = {}
-        for t in normalize_query(query, preset):
+        for t in normalize_query(query, self._query_preset(preset)):
             mult[t] = mult.get(t, 0) + 1
         if self._pruner.needs_vocab and mult:
             if not self._pruner.fitted():
@@ -626,11 +647,7 @@ class FtsIndex:
             for pdf in batches:
                 outs = []
                 for row in pdf.itertuples(index=False):
-                    mi = info.get(row.term)
-                    if mi is None:
-                        # pruning='none' passes non-query terms through;
-                        # the former inner joins dropped them here
-                        continue
+                    mi = info[row.term]
                     base = int(row.shard_id) * shard_size
                     deltas = varbyte_decode(bytes(row.doc_blob))
                     cols = {
@@ -935,14 +952,9 @@ class FtsIndex:
         )
 
         check_positions_fresh(self)
-        if self._pos_point_cache is not None and self._term_dict is not None:
-            expander = lambda pat, n: self._point_expand(pat, "prefix", 0, n)
-        else:
-            expander = lambda pat, n: self.expand_terms(
-                pat, "prefix", max_expand=n
-            )
         variants = _phrase_prefix_variants(
-            self, phrase, expander, max_expansions
+            self, phrase, max_expansions,
+            point=self._point_ready(positional=True),
         )
         if not variants:
             return []
@@ -1031,11 +1043,7 @@ class FtsIndex:
         doc's counts sum across them (multi-rewrite surface)."""
         from .positions import _phrase_sequences, fetch_point_positions
 
-        if (
-            self._pos_point_cache is None
-            or self._term_dict is None
-            or self.n_deleted > self.dead_broadcast_max
-        ):
+        if not self._point_ready(positional=True):
             return None
         pipe_codes: np.ndarray | None = None
         pipe_ids: dict[str, int] = {}
@@ -2297,38 +2305,21 @@ class FtsIndex:
         point budget, or the field array exceeds its budget."""
         shape, lam = self._decay_params(shape, scale, decay)
 
-        def _fallback() -> list[tuple[int, float]]:
-            return [
-                (int(r["doc_id"]), float(r["score"]))
-                for r in self.search_bm25_decay(
-                    query, k=k, preset=preset, field=field, origin=origin,
-                    scale=scale, decay=decay, offset_dist=offset_dist,
-                    shape=shape,
-                ).collect()
-            ]
+        def fallback() -> list[tuple[int, float]]:
+            return self._point_rows(self.search_bm25_decay(
+                query, k=k, preset=preset, field=field, origin=origin,
+                scale=scale, decay=decay, offset_dist=offset_dist,
+                shape=shape,
+            ))
 
-        if (
-            self._point_cache is None
-            or self._term_dict is None
-            or self.n_deleted > self.dead_broadcast_max
-        ):
-            return _fallback()
-        vals = self._field_values_local(field)
+        vals = self._field_values_local(field) if self._point_ready() else None
         if vals is None:
-            return _fallback()
-        mult = self._query_mult(query, preset)
-        if not mult:
-            return []
-        present = {
-            t: (m, self._term_dict[t][0])
-            for t, m in mult.items()
-            if t in self._term_dict
-        }
+            return fallback()
+        present = self._point_present(self._query_mult(query, preset))
         if not present:
             return []
-        df_cap = self._point_max_bytes // 40
-        if any(df_ > df_cap for _, df_ in present.values()):
-            return _fallback()
+        if not self._point_fits(present):
+            return fallback()
         rows = self._point_sweep(present, 0, 0)
         if not rows:
             return []
@@ -2559,25 +2550,65 @@ class FtsIndex:
             return self._bm25_relational(mult, k, hydrate)
         return self._bm25_wand(mult, k, hydrate)
 
-    def _prefix_mult(
-        self, query: str, preset: str, max_expand: int, point: bool = False
+    def _expand(
+        self,
+        pattern: str,
+        kind: str,
+        max_expand: int,
+        max_dist: int = 1,
+        point: bool = False,
+    ) -> list[str]:
+        """Dictionary expansion for every multi-term rewrite: the
+        driver-side :meth:`_point_expand` (bisect, zero jobs) when
+        ``point``, else :meth:`expand_terms` (one bounded lookup job).
+        Identical preference either way (df desc, term asc, LIMIT
+        ``max_expand``), so a point surface rewrites exactly like its
+        distributed twin."""
+        if point:
+            return self._point_expand(pattern, kind, max_dist, max_expand)
+        return self.expand_terms(
+            pattern, kind, max_dist=max_dist, max_expand=max_expand
+        )
+
+    def _rewrite_mult(
+        self,
+        query: str,
+        kind: str,
+        preset: str | None,
+        max_expand: int,
+        max_dist: int = 1,
+        point: bool = False,
     ) -> dict[str, int]:
-        """Shared prefix-rewrite term selection (one copy, so the point
+        """Shared multi-term-rewrite term selection (one copy, so the point
         tier can never desynchronize from the distributed rewrite it
-        must mirror): trailing-``*`` tokens lowercase-then-expand against
-        the dictionary (the pattern is a dictionary prefix, never
-        stemmed); everything else normalizes like :meth:`search_bm25`."""
+        mirrors). ``fuzzy``: every normalized query term expands to the
+        dictionary terms within ``max_dist`` edits, multiplicity carried.
+        ``prefix`` / ``wildcard`` / ``regexp``: pattern tokens (trailing
+        ``*``; a ``*`` or ``?``; wrapped in ``/.../`` — see
+        ``_REWRITE_TOKENS``) lowercase with Go-lower semantics (a pattern
+        addresses the post-pipeline dictionary, never stemmed) and expand;
+        everything else normalizes like :meth:`search_bm25`. Expanded
+        multiplicities sum where patterns overlap."""
+        preset = self._query_preset(preset)
         mult: dict[str, int] = {}
+        if kind == "fuzzy":
+            # normalize WITHOUT the probabilistic term gate (_query_mult):
+            # a typo is precisely a term the gate would reject, and here
+            # its absence from the dictionary is the point, not a pruning
+            # win
+            raw: dict[str, int] = {}
+            for t in normalize_query(query, preset):
+                raw[t] = raw.get(t, 0) + 1
+            for t0, m in raw.items():
+                for t in self._expand(t0, kind, max_expand, max_dist, point):
+                    mult[t] = mult.get(t, 0) + m
+            return mult
+        is_pattern, body = _REWRITE_TOKENS[kind]
         exact_parts: list[str] = []
         for tok in query.split():
-            if len(tok) > 1 and tok.endswith("*"):
-                pat = go_lower(tok[:-1])
-                expanded = (
-                    self._point_expand(pat, "prefix", 0, max_expand)
-                    if point
-                    else self.expand_terms(pat, "prefix", max_expand=max_expand)
-                )
-                for t in expanded:
+            if is_pattern(tok):
+                pat = go_lower(body(tok))
+                for t in self._expand(pat, kind, max_expand, point=point):
                     mult[t] = mult.get(t, 0) + 1
             else:
                 exact_parts.append(tok)
@@ -2588,65 +2619,38 @@ class FtsIndex:
                 mult[t] = mult.get(t, 0) + m
         return mult
 
-    def _wildcard_mult(
-        self, query: str, preset: str, max_expand: int, point: bool = False
-    ) -> dict[str, int]:
-        """Shared wildcard-rewrite term selection (one copy — the point
-        tier mirrors the distributed rewrite exactly): tokens containing
-        ``*`` or ``?`` lowercase (Go-lower; the pattern addresses the
-        post-pipeline dictionary, never stemmed) and expand with
-        ``kind='wildcard'``; everything else normalizes like
-        :meth:`search_bm25`."""
-        mult: dict[str, int] = {}
-        exact_parts: list[str] = []
-        for tok in query.split():
-            if len(tok) > 1 and ("*" in tok or "?" in tok):
-                pat = go_lower(tok)
-                expanded = (
-                    self._point_expand(pat, "wildcard", 0, max_expand)
-                    if point
-                    else self.expand_terms(pat, "wildcard", max_expand=max_expand)
-                )
-                for t in expanded:
-                    mult[t] = mult.get(t, 0) + 1
-            else:
-                exact_parts.append(tok)
-        if exact_parts:
-            for t, m in self._query_mult(
-                " ".join(exact_parts), preset
-            ).items():
-                mult[t] = mult.get(t, 0) + m
-        return mult
+    def _point_rewrite(
+        self,
+        search,
+        kind: str,
+        query: str,
+        k: int,
+        preset: str | None,
+        max_expand: int,
+        **kw,
+    ) -> list[tuple[int, float]]:
+        """Point twin of a multi-term rewrite surface: the same
+        :meth:`_rewrite_mult` term selection against the driver
+        dictionary, then the in-process sweep; the distributed ``search``
+        (called with the same arguments) serves whenever the tier cannot.
+        Expanded terms come from the dictionary by construction, so only
+        exact terms absent from the corpus drop from ``present``."""
 
-    def _regexp_mult(
-        self, query: str, preset: str, max_expand: int, point: bool = False
-    ) -> dict[str, int]:
-        """Shared regexp-rewrite term selection (one copy — the point
-        tier mirrors the distributed rewrite exactly): tokens wrapped in
-        ``/.../`` (the Lucene query-syntax regexp marker) lowercase
-        (Go-lower; the pattern addresses the post-pipeline dictionary)
-        and expand with ``kind='regexp'``; everything else normalizes
-        like :meth:`search_bm25`."""
-        mult: dict[str, int] = {}
-        exact_parts: list[str] = []
-        for tok in query.split():
-            if len(tok) > 2 and tok.startswith("/") and tok.endswith("/"):
-                pat = go_lower(tok[1:-1])
-                expanded = (
-                    self._point_expand(pat, "regexp", 0, max_expand)
-                    if point
-                    else self.expand_terms(pat, "regexp", max_expand=max_expand)
-                )
-                for t in expanded:
-                    mult[t] = mult.get(t, 0) + 1
-            else:
-                exact_parts.append(tok)
-        if exact_parts:
-            for t, m in self._query_mult(
-                " ".join(exact_parts), preset
-            ).items():
-                mult[t] = mult.get(t, 0) + m
-        return mult
+        def fallback() -> list[tuple[int, float]]:
+            return self._point_rows(
+                search(query, k=k, preset=preset, max_expand=max_expand, **kw)
+            )
+
+        if not self._point_ready():
+            return fallback()
+        present = self._point_present(self._rewrite_mult(
+            query, kind, preset, max_expand, point=True, **kw
+        ))
+        if not present:
+            return []
+        if not self._point_fits(present):
+            return fallback()
+        return self._point_sweep(present, k, 0)
 
     def search_bm25_regexp(
         self,
@@ -2676,10 +2680,7 @@ class FtsIndex:
         metacharacter pays a full dictionary scan — the known Lucene
         leading-wildcard caveat, one bounded lookup job here.
         """
-        preset = preset or (
-            "multilingual" if self.preset == "by_lang" else self.preset
-        )
-        mult = self._regexp_mult(query, preset, max_expand)
+        mult = self._rewrite_mult(query, "regexp", preset, max_expand)
         return self._expanded_search(mult, k, mode, hydrate)
 
     def search_bm25_wildcard(
@@ -2705,10 +2706,7 @@ class FtsIndex:
         Lucene caveat — a full dictionary pass, still one bounded lookup
         job); patterns with a literal prefix prune like prefix queries.
         """
-        preset = preset or (
-            "multilingual" if self.preset == "by_lang" else self.preset
-        )
-        mult = self._wildcard_mult(query, preset, max_expand)
+        mult = self._rewrite_mult(query, "wildcard", preset, max_expand)
         return self._expanded_search(mult, k, mode, hydrate)
 
     def search_bm25_prefix(
@@ -2732,10 +2730,7 @@ class FtsIndex:
         its own idf and multiplicity summed when patterns overlap — the
         semantics of SQL ``term LIKE 'p%'`` against the same corpus.
         """
-        preset = preset or (
-            "multilingual" if self.preset == "by_lang" else self.preset
-        )
-        mult = self._prefix_mult(query, preset, max_expand)
+        mult = self._rewrite_mult(query, "prefix", preset, max_expand)
         return self._expanded_search(mult, k, mode, hydrate)
 
     def search_bm25_fuzzy(
@@ -2759,21 +2754,9 @@ class FtsIndex:
         only stores analyzed terms (Lucene lowercases-but-does-not-stem
         fuzzy terms only because its dictionary keeps unstemmed fields).
         """
-        preset = preset or (
-            "multilingual" if self.preset == "by_lang" else self.preset
+        mult = self._rewrite_mult(
+            query, "fuzzy", preset, max_expand, max_dist=max_dist
         )
-        # normalize WITHOUT the probabilistic term gate (_query_mult):
-        # a typo is precisely a term the gate would reject, and here its
-        # absence from the dictionary is the point, not a pruning win
-        raw: dict[str, int] = {}
-        for t in normalize_query(query, preset):
-            raw[t] = raw.get(t, 0) + 1
-        mult: dict[str, int] = {}
-        for t0, m in raw.items():
-            for t in self.expand_terms(
-                t0, "fuzzy", max_dist=max_dist, max_expand=max_expand
-            ):
-                mult[t] = mult.get(t, 0) + m
         return self._expanded_search(mult, k, mode, hydrate)
 
     # ---- synonym groups (Lucene SynonymQuery semantics) -----------------
@@ -2853,10 +2836,9 @@ class FtsIndex:
         max-over-members skip data the index doesn't store, so there is
         no WAND variant (Lucene similarly special-cases SynonymQuery
         impacts)."""
-        preset = preset or (
-            "multilingual" if self.preset == "by_lang" else self.preset
+        term_gid, gid_mult = self._synonym_groups(
+            query, synonyms, self._query_preset(preset)
         )
-        term_gid, gid_mult = self._synonym_groups(query, synonyms, preset)
         if not term_gid:
             return self._maybe_hydrate(
                 self._empty_bm25_result(), hydrate, bounded=True
@@ -2923,43 +2905,29 @@ class FtsIndex:
         Falls back to the distributed plan when the tier is disabled, a
         member's posting list exceeds the point budget, or tombstones are
         past the driver-array bound."""
-        preset = preset or (
-            "multilingual" if self.preset == "by_lang" else self.preset
-        )
 
         def fallback() -> list[tuple[int, float]]:
-            return [
-                (int(r["doc_id"]), float(r["score"]))
-                for r in self.search_bm25_synonyms(
-                    query, synonyms, k=k, preset=preset, hydrate=False
-                ).collect()
-            ]
+            return self._point_rows(self.search_bm25_synonyms(
+                query, synonyms, k=k, preset=preset
+            ))
 
-        term_gid, gid_mult = self._synonym_groups(query, synonyms, preset)
+        term_gid, gid_mult = self._synonym_groups(
+            query, synonyms, self._query_preset(preset)
+        )
         if not term_gid:
             return []
-        if (
-            self._point_cache is None
-            or self._term_dict is None
-            or self.n_deleted > self.dead_broadcast_max
-        ):
+        if not self._point_ready():
             return fallback()
         present = {
             t: g for t, g in term_gid.items() if t in self._term_dict
         }
         if not present:
             return []
-        df_cap = self._point_max_bytes // 40
-        if any(self._term_dict[t][0] > df_cap for t in present):
+        if not self._point_fits(present):
             return fallback()
         need = sorted(present)
         with self._point_lock:
-            missing = [t for t in need if t not in self._point_cache]
-            if missing:
-                self._point_fetch(missing, protect=frozenset(need))
-            else:
-                for t in need:
-                    self._point_cache.move_to_end(t)
+            self._point_pin(need)
             entries = {t: self._point_cache[t] for t in need}
         n, avgdl = float(self.n_docs), self.avgdl
         # per group: concat members' (doc, tf, dl), sum tf per doc, one
@@ -3027,21 +2995,17 @@ class FtsIndex:
         rationale in :meth:`search_bm25_fuzzy`). ``point=True`` expands
         against the driver dictionary (bisect, zero jobs — identical
         preference, asserted in tests/test_point_serving.py)."""
-
-        def expand(pat: str, kind: str, max_dist: int = 1) -> list[str]:
-            if point:
-                return self._point_expand(pat, kind, max_dist, max_expand)
-            return self.expand_terms(
-                pat, kind, max_dist=max_dist, max_expand=max_expand
-            )
-
         out: list[str] = []
         for a in atoms:
             if a.kind == "prefix":
-                out.extend(expand(go_lower(a.text), "prefix"))
+                out.extend(self._expand(
+                    go_lower(a.text), "prefix", max_expand, point=point
+                ))
             elif a.kind == "fuzzy":
                 for t0 in normalize_query(a.text, preset):
-                    out.extend(expand(t0, "fuzzy", a.max_dist))
+                    out.extend(self._expand(
+                        t0, "fuzzy", max_expand, a.max_dist, point
+                    ))
             else:
                 out.extend(normalize_query(a.text, preset))
         return out
@@ -3152,9 +3116,7 @@ class FtsIndex:
         if offset < 0:
             raise ValueError(f"offset must be >= 0, got {offset}")
         bq = parse_query(query)
-        preset = preset or (
-            "multilingual" if self.preset == "by_lang" else self.preset
-        )
+        preset = self._query_preset(preset)
 
         def empty() -> DataFrame:
             return self._maybe_hydrate(
@@ -3496,6 +3458,16 @@ class FtsIndex:
                 self._point_cache.move_to_end(term)
         self._point_evict(protect)
 
+    def _point_pin(self, terms: list[str]) -> None:
+        """Make every one of ``terms`` cache-resident at MRU (one fetch
+        job for the missing ones). Callers hold ``_point_lock``."""
+        missing = [t for t in terms if t not in self._point_cache]
+        if missing:
+            self._point_fetch(missing, frozenset(terms))
+        else:
+            for t in terms:
+                self._point_cache.move_to_end(t)
+
     def _point_evict(self, protect: frozenset[str]) -> None:
         """Evict from the LRU end until under budget. Protected terms sit
         contiguously at the MRU end (callers refresh them first), so
@@ -3511,6 +3483,43 @@ class FtsIndex:
                 break
             del self._point_cache[old]
             self._point_cache_bytes -= self._point_term_bytes(tabs)
+
+    # ---- point-tier admission: the one rule every *_point surface applies
+
+    def _point_ready(self, positional: bool = False) -> bool:
+        """The tier can serve at all: point serving (the positional tier
+        when ``positional``) is on, the driver holds the dictionary, and
+        the tombstone set fits the driver array (past
+        ``dead_broadcast_max`` only the distributed relational anti-join
+        can exclude deletes)."""
+        cache = self._pos_point_cache if positional else self._point_cache
+        return not (
+            cache is None
+            or self._term_dict is None
+            or self.n_deleted > self.dead_broadcast_max
+        )
+
+    def _point_fits(self, terms: Iterable[str]) -> bool:
+        """Every dictionary term among ``terms`` has a posting list small
+        enough to point-cache; an oversized list streams through the
+        distributed path instead of the driver heap."""
+        cap = self._point_max_bytes // _POINT_BUDGET_BYTES_PER_POSTING
+        return all(
+            self._term_dict[t][0] <= cap for t in terms if t in self._term_dict
+        )
+
+    def _point_present(self, mult: dict) -> dict[str, tuple]:
+        """term -> (mult, df) for the terms of ``mult`` in the dictionary."""
+        return {
+            t: (m, self._term_dict[t][0])
+            for t, m in mult.items()
+            if t in self._term_dict
+        }
+
+    @staticmethod
+    def _point_rows(df: DataFrame) -> list[tuple[int, float]]:
+        """A distributed fallback's rows in the point surfaces' shape."""
+        return [(int(r["doc_id"]), float(r["score"])) for r in df.collect()]
 
     def search_bm25_point(
         self,
@@ -3546,23 +3555,16 @@ class FtsIndex:
         set to doc ids is a Spark job, which defeats the point tier's
         no-job premise.
         """
-        if (
-            self._point_cache is None
-            or self._term_dict is None
-            or within is not None
-            # beyond the driver-array bound the tombstone set cannot be
-            # materialized in-process; the distributed path has the
-            # relational anti-join fallback for exactly this state
-            or self.n_deleted > self.dead_broadcast_max
-        ):
-            return [
-                (int(r["doc_id"]), float(r["score"]))
-                for r in self.search_bm25(
-                    query, k=k, preset=preset, mode="wand",
-                    conjunctive=conjunctive, exclude=exclude, within=within,
-                    min_match=min_match, offset=offset, after=after,
-                ).collect()
-            ]
+
+        def fallback() -> list[tuple[int, float]]:
+            return self._point_rows(self.search_bm25(
+                query, k=k, preset=preset, mode="wand",
+                conjunctive=conjunctive, exclude=exclude, within=within,
+                min_match=min_match, offset=offset, after=after,
+            ))
+
+        if within is not None or not self._point_ready():
+            return fallback()
         if min_match is not None and conjunctive:
             raise ValueError("pass either conjunctive or min_match, not both")
         if offset < 0:
@@ -3582,37 +3584,15 @@ class FtsIndex:
             if conjunctive and set(mult) & set(excl):
                 return []
             mult = {t: m for t, m in mult.items() if t not in excl}
-        present = {
-            t: (m, self._term_dict[t][0])
-            for t, m in mult.items()
-            if t in self._term_dict
-        }
-        excl_present = {
-            t: (0, self._term_dict[t][0])
-            for t in excl
-            if t in self._term_dict
-        }
+        present = self._point_present(mult)
+        excl_present = frozenset(t for t in excl if t in self._term_dict)
         if not present or (require_n > 0 and len(present) < require_n):
             return []
-        # a term with df * 20 bytes > budget/2 cannot be point-cached;
-        # stream it through the distributed path instead of the driver
-        df_cap = self._point_max_bytes // 40
-        if any(
-            df_ > df_cap
-            for _, df_ in list(present.values()) + list(excl_present.values())
-        ):
-            return [
-                (int(r["doc_id"]), float(r["score"]))
-                for r in self.search_bm25(
-                    query, k=k, preset=preset, mode="wand",
-                    conjunctive=conjunctive, exclude=exclude,
-                    min_match=min_match, offset=offset, after=after,
-                ).collect()
-            ]
+        if not self._point_fits([*present, *excl_present]):
+            return fallback()
         k_eff = k + offset if (offset and k > 0) else k
         rows = self._point_sweep(
-            present, k_eff, require_n, frozenset(excl_present) or None,
-            after=after,
+            present, k_eff, require_n, excl_present or None, after=after,
         )
         return rows[offset:] if offset else rows
 
@@ -3645,16 +3625,9 @@ class FtsIndex:
         eff_n_docs = self.n_docs if n_docs is None else int(n_docs)
         eff_avgdl = self.avgdl if avgdl is None else float(avgdl)
         with self._point_lock:
-            all_terms = dict.fromkeys(
-                list(present) + sorted(excl_terms or ())
+            self._point_pin(
+                list(dict.fromkeys(list(present) + sorted(excl_terms or ())))
             )
-            protect = frozenset(all_terms)
-            missing = [t for t in all_terms if t not in self._point_cache]
-            if missing:
-                self._point_fetch(missing, protect)
-            else:
-                for t in all_terms:
-                    self._point_cache.move_to_end(t)
             # per-shard sweep, exactly the distributed kernel's unit of
             # work; global merge = top-k of the union of shard top-ks
             # term-ASCENDING weighted lists: the distributed kernel sees
@@ -3817,23 +3790,8 @@ class FtsIndex:
         """:meth:`search_bm25_prefix` on the point tier: expansion runs
         against the driver dictionary (bisect, no job), the sweep runs
         in-process; results are exactly the distributed rewrite's."""
-        if self._point_cache is None or self._term_dict is None:
-            return [
-                (int(r["doc_id"]), float(r["score"]))
-                for r in self.search_bm25_prefix(
-                    query, k=k, preset=preset, max_expand=max_expand
-                ).collect()
-            ]
-        preset = preset or (
-            "multilingual" if self.preset == "by_lang" else self.preset
-        )
-        mult = self._prefix_mult(query, preset, max_expand, point=True)
-        return self._point_mult_search(
-            mult,
-            k,
-            lambda: self.search_bm25_prefix(
-                query, k=k, preset=preset, max_expand=max_expand
-            ),
+        return self._point_rewrite(
+            self.search_bm25_prefix, "prefix", query, k, preset, max_expand
         )
 
     def search_bm25_point_wildcard(
@@ -3847,23 +3805,9 @@ class FtsIndex:
         regex scans the driver dictionary (literal-prefix bisect bound
         when the pattern has one), the sweep runs in-process; results are
         exactly the distributed rewrite's."""
-        if self._point_cache is None or self._term_dict is None:
-            return [
-                (int(r["doc_id"]), float(r["score"]))
-                for r in self.search_bm25_wildcard(
-                    query, k=k, preset=preset, max_expand=max_expand
-                ).collect()
-            ]
-        preset = preset or (
-            "multilingual" if self.preset == "by_lang" else self.preset
-        )
-        mult = self._wildcard_mult(query, preset, max_expand, point=True)
-        return self._point_mult_search(
-            mult,
-            k,
-            lambda: self.search_bm25_wildcard(
-                query, k=k, preset=preset, max_expand=max_expand
-            ),
+        return self._point_rewrite(
+            self.search_bm25_wildcard, "wildcard", query, k, preset,
+            max_expand,
         )
 
     def search_bm25_point_regexp(
@@ -3877,23 +3821,8 @@ class FtsIndex:
         fully matches against the driver dictionary (literal-prefix
         bisect bound when the pattern has one), the sweep runs
         in-process; results are exactly the distributed rewrite's."""
-        if self._point_cache is None or self._term_dict is None:
-            return [
-                (int(r["doc_id"]), float(r["score"]))
-                for r in self.search_bm25_regexp(
-                    query, k=k, preset=preset, max_expand=max_expand
-                ).collect()
-            ]
-        preset = preset or (
-            "multilingual" if self.preset == "by_lang" else self.preset
-        )
-        mult = self._regexp_mult(query, preset, max_expand, point=True)
-        return self._point_mult_search(
-            mult,
-            k,
-            lambda: self.search_bm25_regexp(
-                query, k=k, preset=preset, max_expand=max_expand
-            ),
+        return self._point_rewrite(
+            self.search_bm25_regexp, "regexp", query, k, preset, max_expand
         )
 
     def search_bm25_point_fuzzy(
@@ -3906,31 +3835,9 @@ class FtsIndex:
     ) -> list[tuple[int, float]]:
         """:meth:`search_bm25_fuzzy` on the point tier (see
         :meth:`_point_expand` for the fuzzy-scan cost note)."""
-        if self._point_cache is None or self._term_dict is None:
-            return [
-                (int(r["doc_id"]), float(r["score"]))
-                for r in self.search_bm25_fuzzy(
-                    query, k=k, preset=preset,
-                    max_dist=max_dist, max_expand=max_expand,
-                ).collect()
-            ]
-        preset = preset or (
-            "multilingual" if self.preset == "by_lang" else self.preset
-        )
-        mult: dict[str, int] = {}
-        raw: dict[str, int] = {}
-        for t in normalize_query(query, preset):
-            raw[t] = raw.get(t, 0) + 1
-        for t0, m in raw.items():
-            for t in self._point_expand(t0, "fuzzy", max_dist, max_expand):
-                mult[t] = mult.get(t, 0) + m
-        return self._point_mult_search(
-            mult,
-            k,
-            lambda: self.search_bm25_fuzzy(
-                query, k=k, preset=preset,
-                max_dist=max_dist, max_expand=max_expand,
-            ),
+        return self._point_rewrite(
+            self.search_bm25_fuzzy, "fuzzy", query, k, preset, max_expand,
+            max_dist=max_dist,
         )
 
     def search_boolean_point(
@@ -3962,19 +3869,12 @@ class FtsIndex:
             raise ValueError(f"offset must be >= 0, got {offset}")
 
         def fallback() -> list[tuple[int, float]]:
-            return [
-                (int(r["doc_id"]), float(r["score"]))
-                for r in self.search_boolean(
-                    query, k=k, preset=preset,
-                    max_expand=max_expand, offset=offset,
-                ).collect()
-            ]
+            return self._point_rows(self.search_boolean(
+                query, k=k, preset=preset, max_expand=max_expand,
+                offset=offset,
+            ))
 
-        if (
-            self._point_cache is None
-            or self._term_dict is None
-            or self.n_deleted > self.dead_broadcast_max
-        ):
+        if not self._point_ready():
             return fallback()
         bq = parse_query(query)
         phrase_ids: np.ndarray | None = None
@@ -4001,9 +3901,7 @@ class FtsIndex:
             )
             if not incl_docs.size:
                 return []
-        preset = preset or (
-            "multilingual" if self.preset == "by_lang" else self.preset
-        )
+        preset = self._query_preset(preset)
         resolved = self._resolve_boolean(bq, preset, max_expand, point=True)
         if resolved is None:
             return []
@@ -4013,14 +3911,8 @@ class FtsIndex:
         for ph, _slop in [(p, 0) for p in bq.phrases] + list(bq.near):
             for t in normalize_query(ph, preset):
                 mult[t] = mult.get(t, 0) + 1
-        if not mult:
-            return []
         term_gmask, full_mask = self._group_masks(groups)
-        present = {
-            t: (m, self._term_dict[t][0])
-            for t, m in mult.items()
-            if t in self._term_dict
-        }
+        present = self._point_present(mult)
         if not present:
             return []
         if full_mask:
@@ -4030,47 +3922,15 @@ class FtsIndex:
             if (covered & full_mask) != full_mask:
                 # a required group has no term in the dictionary
                 return []
-        excl_present = {t for t in excl if t in self._term_dict}
-        df_cap = self._point_max_bytes // 40
-        if any(
-            self._term_dict[t][0] > df_cap
-            for t in list(present) + sorted(excl_present)
-        ):
+        excl_present = frozenset(t for t in excl if t in self._term_dict)
+        if not self._point_fits([*present, *excl_present]):
             return fallback()
         k_eff = k + offset if (offset and k > 0) else k
         rows = self._point_sweep(
-            present, k_eff, 0, frozenset(excl_present) or None,
+            present, k_eff, 0, excl_present or None,
             term_gmask, full_mask, incl_docs=incl_docs,
         )
         return rows[offset:] if offset else rows
-
-    def _point_mult_search(
-        self,
-        mult: dict[str, int],
-        k: int,
-        fallback,
-    ) -> list[tuple[int, float]]:
-        """Shared tail of the expanded point queries: df-cap check (a
-        posting list too large for the driver budget streams through the
-        distributed ``fallback`` plan instead), then the in-process
-        sweep. Expanded terms come from the dictionary by construction,
-        so ``present`` only drops exact terms absent from the corpus."""
-        present = {
-            t: (m, self._term_dict[t][0])
-            for t, m in mult.items()
-            if t in self._term_dict
-        }
-        if not present:
-            return []
-        df_cap = self._point_max_bytes // 40
-        if any(df_ > df_cap for _, df_ in present.values()) or (
-            self.n_deleted > self.dead_broadcast_max
-        ):
-            return [
-                (int(r["doc_id"]), float(r["score"]))
-                for r in fallback().collect()
-            ]
-        return self._point_sweep(present, k, 0)
 
     def point_cache_stats(self) -> dict[str, int]:
         return {
@@ -4907,12 +4767,7 @@ def make_wand_kernel(
         shard_mask = 0
         for term, t in term_map.items():
             if term_stats is not None:
-                stats = term_stats.get(term)
-                if stats is None:
-                    # pruning='none' (a valid strategy) passes every shard
-                    # term through; non-query terms score nothing
-                    continue
-                mult, df_ = float(stats[0]), int(stats[1])
+                mult, df_ = float(term_stats[term][0]), int(term_stats[term][1])
             else:
                 mult, df_ = t["row_mult"], t["row_df"]
             weighted.append((mult * bm25_idf(n_docs, df_), t))

@@ -156,8 +156,8 @@ class Pipeline:
 
 
 # Per-process memo of the whole-chain token function, keyed by pipeline
-# NAME (preset names are unique; custom pipelines encode their filter
-# flags in the name via custom_spec, so the name determines the chain).
+# NAME (preset names are unique; a custom pipeline is named by its full
+# custom_spec string, so the name determines the chain).
 # Lives at module level — NOT on the Pipeline instance — so Pipeline
 # objects captured in UDF closures stay cloudpickle-able; each worker
 # process rebuilds its own memo lazily.
@@ -267,7 +267,7 @@ def _parse_custom(spec: str) -> Pipeline:
         filters.append(english_stem_filter)
     if kv.get("st_ru", 0):
         filters.append(russian_stem_filter)
-    return Pipeline("custom", tuple(filters))
+    return Pipeline(spec, tuple(filters))
 
 
 def get_pipeline(name: str) -> Pipeline:

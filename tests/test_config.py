@@ -85,6 +85,7 @@ def test_unknown_key_fails(tmp_path):
         ("query:\n  scorer: tfidf\n", "scorer"),
         ("query:\n  mode: scan\n", "mode"),
         ("query:\n  pruning: xor8\n", "pruning"),
+        ("query:\n  pruning: none\n", "pruning"),
         ("preset: klingon\n", "preset"),
         ("index:\n  shard_size: 0\n", "shard_size"),
         ("index:\n  n_waves: -1\n", "n_waves"),
@@ -132,7 +133,7 @@ def test_resolve_pipeline_prefers_preset():
     # get_pipeline assembles the same chain as pipeline_from_flags
     assert spec.startswith("custom:")
     custom = get_pipeline(spec)
-    assert custom.name == "custom"
+    assert custom.name == spec  # the spec names (and memo-keys) the chain
     flagged = pipeline_from_flags(cfg.pipeline)
     for text in ("The Running foxes jumped 123 ab", ""):
         assert custom.process(text) == flagged.process(text)
@@ -143,6 +144,8 @@ def test_pruning_factory_validates():
 
     with pytest.raises(ValueError, match="xor8"):
         make_pruner("xor8")
+    with pytest.raises(ValueError, match="none"):
+        make_pruner("none")
     assert make_pruner("dict").gates_with_dictionary
     assert not make_pruner("storage").gates_with_dictionary
     # cuckoo/ribbon (r3: SURVEY §2.5 F2-F4 as real strategies) need a vocab

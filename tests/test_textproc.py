@@ -238,3 +238,14 @@ def test_query_doc_symmetry():
     # NormalizeToKeys uses the same pipeline for queries and documents
     text = "French hotels"
     assert tp.ENGLISH.process(text) == ["french", "hotel"]
+
+
+@pytest.mark.parametrize("first_stems", [False, True])
+def test_custom_pipelines_do_not_share_token_memo(first_stems):
+    # the whole-chain token memo is keyed by pipeline name: two custom
+    # specs differing only in a filter flag must not reuse each other's
+    # chain, whichever runs first
+    specs = {s: tp.custom_spec(stem_en=s) for s in (False, True)}
+    want = {False: ["tables"], True: ["tabl"]}
+    for stems in (first_stems, not first_stems):
+        assert tp.get_pipeline(specs[stems]).process("tables") == want[stems]
