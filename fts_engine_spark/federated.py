@@ -28,9 +28,10 @@ classic distributed-IR mistake); :class:`FederatedFtsIndex` instead:
      free when warm, one pruned terms-scan job per sub when cold);
   2. scatters the SAME block-max WAND kernel to every snapshot with the
      global constants riding its closure
-     (:meth:`fts_engine_spark.query.FtsIndex._bm25_wand_stats` — the plan
-     per sub is identical to a single-index warm query: pruned posting
-     scan -> one applyInPandas per shard -> local top-k, zero exchanges);
+     (:meth:`fts_engine_spark.query.FtsIndex._wand_plan` with the global
+     df / N / avgdl — the plan per sub is identical to a single-index warm
+     query: pruned posting scan -> one applyInPandas per shard -> local
+     top-k, zero exchanges);
   3. gathers per-sub top-k and takes the global top-k — a union + sort of
      at most ``len(subs) * k`` hydrated rows, never a rescore.
 
@@ -63,7 +64,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .query import _INCLUDE_TOO_BIG, FtsIndex, normalize_query
+from .query import _INCLUDE_TOO_BIG, FtsIndex, QuerySpec, normalize_query
 
 
 class FederatedFtsIndex:
@@ -119,6 +120,23 @@ class FederatedFtsIndex:
             mult[t] = mult.get(t, 0) + 1
         return mult
 
+    # the single-index argument rules over the federation's own
+    # (gate-free) _query_mult
+    _bm25_spec = FtsIndex._bm25_spec
+
+    def _global_stats(
+        self, spec: QuerySpec
+    ) -> "tuple[list[dict[str, tuple[int, int]]], dict[str, int]]":
+        """(each sub's ``term_stats`` of the spec's terms, the GLOBAL df
+        per term): one point lookup per sub — no job at all when warm."""
+        lookup = [*spec.mult, *sorted(spec.excl)]
+        sub_stats = [s.term_stats(lookup) for s in self.subs]
+        df_global: dict[str, int] = {}
+        for st in sub_stats:
+            for t, (df_, _cf) in st.items():
+                df_global[t] = df_global.get(t, 0) + int(df_)
+        return sub_stats, df_global
+
     def _empty(self) -> DataFrame:
         return self.spark.range(0).select(
             F.col("id").cast("string").alias("url"),
@@ -150,45 +168,24 @@ class FederatedFtsIndex:
         (the single-index relational fallback has no stats-override twin);
         restrict the set or query the sub directly.
         """
-        if min_match is not None and conjunctive:
-            raise ValueError("pass either conjunctive or min_match, not both")
-        mult = self._query_mult(query, preset)
-        if not mult:
-            return self._empty()
-        require_n = len(mult) if conjunctive else max(0, int(min_match or 0))
-        if require_n > len(mult):
-            return self._empty()
-        excl_mult = self._query_mult(exclude, preset) if exclude else {}
-        if excl_mult:
-            if conjunctive and set(mult) & set(excl_mult):
-                return self._empty()
-            mult = {t: m for t, m in mult.items() if t not in excl_mult}
-            if not mult:
-                return self._empty()
+        spec = self._bm25_spec(
+            query, preset, exclude, k=k, conjunctive=conjunctive,
+            min_match=min_match,
+        )
+        return self._search(spec, within)
 
-        # global stats: one point lookup per sub (warm: no job at all)
-        lookup = list(mult) + list(excl_mult)
-        sub_stats = [s.term_stats(lookup) for s in self.subs]
-        df_global: dict[str, int] = {}
-        for st in sub_stats:
-            for t, (df_, _cf) in st.items():
-                df_global[t] = df_global.get(t, 0) + int(df_)
-        present_global = {t: m for t, m in mult.items() if t in df_global}
-        if not present_global or (
-            require_n > 0 and len(present_global) < require_n
-        ):
-            # conjunctive/min_match: a term absent from EVERY snapshot can
-            # never be matched — global empty, zero jobs
+    def _search(self, spec: "QuerySpec | None", within=None) -> DataFrame:
+        if spec is None:
+            return self._empty()
+        sub_stats, df_global = self._global_stats(spec)
+        if not spec.viable(df_global):
+            # a term AND/min_match needs is absent from EVERY snapshot:
+            # global empty, zero jobs
             return self._empty()
 
         parts: list[DataFrame] = []
         for sub, stats in zip(self.subs, sub_stats):
-            present = {
-                t: (float(m), df_global[t])
-                for t, m in present_global.items()
-                if t in stats
-            }
-            if not present or (require_n > 0 and len(present) < require_n):
+            if not spec.viable(stats):
                 continue  # this snapshot cannot contribute any match
             incl_ids = None
             if within is not None:
@@ -201,15 +198,19 @@ class FederatedFtsIndex:
                     )
                 if incl_ids is not None and len(incl_ids) == 0:
                     continue  # restriction excludes this whole snapshot
-            excl_present = frozenset(t for t in excl_mult if t in stats)
-            scored = sub._bm25_wand_stats(
-                present, k,
-                n_docs=self.n_docs, avgdl=self.avgdl,
-                require_n=require_n,
-                excl_terms=excl_present or None,
-                incl_ids=incl_ids,
+            if sub.n_deleted > sub.dead_broadcast_max:
+                # the relational fallback has no stats-override twin:
+                # fail loudly rather than mis-score
+                raise RuntimeError(
+                    f"{sub.n_deleted} pending deletes exceed "
+                    f"dead_broadcast_max={sub.dead_broadcast_max}; run "
+                    "compact_index on this sub-index before federated "
+                    "serving"
+                )
+            scored = sub._wand_plan(
+                spec, stats, df_global, self.n_docs, self.avgdl, incl_ids
             )
-            right = F.broadcast(scored) if k > 0 else scored
+            right = F.broadcast(scored) if spec.k > 0 else scored
             parts.append(
                 sub.docs()
                 .select("doc_id", "url", "url_md5")
@@ -221,8 +222,8 @@ class FederatedFtsIndex:
         out = reduce(DataFrame.unionByName, parts).orderBy(
             F.desc("score"), F.asc("url")
         )
-        if k > 0:
-            out = out.limit(k)
+        if spec.k > 0:
+            out = out.limit(spec.k)
         return out
 
     # -- point-serving tier -------------------------------------------------
@@ -257,73 +258,42 @@ class FederatedFtsIndex:
         Per sub this is the single-index point sweep
         (:meth:`FtsIndex._point_sweep`) with the federation's global
         (df, N, avgdl) riding as overrides — the point-tier twin of
-        :meth:`FtsIndex._bm25_wand_stats`. Falls back to the distributed
+        the distributed scatter. Falls back to the distributed
         federated path when any snapshot cannot point-serve (tier off,
         a term's postings exceed its point budget, or its tombstone set
         exceeds the driver-array bound). Scale shape: per-sub work is an
         in-memory sweep + a ~k-row-group parquet read; the merge is
         ``len(subs) * k`` tuples on the driver.
         """
+        spec = self._bm25_spec(
+            query, preset, exclude, k=k, conjunctive=conjunctive,
+            min_match=min_match,
+        )
 
         def _fallback() -> list[tuple[str, str, float]]:
             return [
                 (r["url"], r["url_md5"], float(r["score"]))
-                for r in self.search_bm25(
-                    query, k=k, preset=preset, conjunctive=conjunctive,
-                    min_match=min_match, exclude=exclude,
-                ).collect()
+                for r in self._search(spec).collect()
             ]
 
         if not all(s._point_ready() for s in self.subs):
             return _fallback()
-        if min_match is not None and conjunctive:
-            raise ValueError("pass either conjunctive or min_match, not both")
-        mult = self._query_mult(query, preset)
-        if not mult:
+        if spec is None:
             return []
-        require_n = len(mult) if conjunctive else max(0, int(min_match or 0))
-        if require_n > len(mult):
-            return []
-        excl_mult = self._query_mult(exclude, preset) if exclude else {}
-        if excl_mult:
-            if conjunctive and set(mult) & set(excl_mult):
-                return []
-            mult = {t: m for t, m in mult.items() if t not in excl_mult}
-            if not mult:
-                return []
-
-        # global stats: warm term_stats is a pure dict lookup, no job
-        lookup = list(mult) + list(excl_mult)
-        sub_stats = [s.term_stats(lookup) for s in self.subs]
-        df_global: dict[str, int] = {}
-        for st in sub_stats:
-            for t, (df_, _cf) in st.items():
-                df_global[t] = df_global.get(t, 0) + int(df_)
-        present_global = {t: m for t, m in mult.items() if t in df_global}
-        if not present_global or (
-            require_n > 0 and len(present_global) < require_n
-        ):
+        sub_stats, df_global = self._global_stats(spec)
+        if not spec.viable(df_global):
             return []
         # budget gate on the SUB-LOCAL df (that is what gets cached): any
         # oversized posting list routes the whole query distributed, same
         # rule as the single-index tier
-        if not all(s._point_fits(lookup) for s in self.subs):
+        if not all(s._point_fits([*spec.mult, *spec.excl]) for s in self.subs):
             return _fallback()
 
         merged: list[tuple[float, str, str]] = []
         for sub, stats in zip(self.subs, sub_stats):
-            present = {
-                t: (m, df_global[t])
-                for t, m in present_global.items()
-                if t in stats
-            }
-            if not present or (require_n > 0 and len(present) < require_n):
+            if not spec.viable(stats):
                 continue
-            excl_present = frozenset(t for t in excl_mult if t in stats)
-            rows = sub._point_sweep(
-                present, k, require_n, excl_present or None,
-                n_docs=self.n_docs, avgdl=self.avgdl,
-            )
+            rows = sub._point_sweep(spec, df_global, self.n_docs, self.avgdl)
             if not rows:
                 continue
             urls = sub.doc_urls_local([d for d, _s in rows])

@@ -11,36 +11,34 @@ it is a LocalTableScan the planner can broadcast without running tasks.
 ``local_df`` is the drop-in replacement used by every query-path site
 that materializes bounded results or tiny join relations. Rows must be
 non-null in non-string columns (true for every caller: ids, scores,
-counts); on any conversion surprise it falls back to the classic path,
-so behavior can only differ in speed.
+counts).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import DataType, StructType
 
 
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     """Bounded local ``rows`` (tuples/Rows) as an Arrow LocalRelation
-    DataFrame with exactly ``schema`` (a DDL string or StructType)."""
-    if isinstance(schema, str):
-        from pyspark.sql.types import _parse_datatype_string
-
-        st = _parse_datatype_string(schema)
-    else:
-        st = schema
+    DataFrame with exactly ``schema`` (a DDL string or StructType). A row
+    whose arity differs from the schema's field count raises
+    ``ValueError``."""
+    st = DataType.fromDDL(schema) if isinstance(schema, str) else schema
     assert isinstance(st, StructType)
     rows = [tuple(r) for r in rows]
+    width = len(st.fields)
+    for r in rows:
+        if len(r) != width:
+            raise ValueError(
+                f"row arity {len(r)} does not match the schema's {width} "
+                f"fields: {r!r}"
+            )
     if not rows:
         return spark.createDataFrame([], st)
-    try:
-        import pandas as pd
+    import pandas as pd
 
-        cols = list(zip(*rows))
-        pdf = pd.DataFrame(
-            {f.name: list(c) for f, c in zip(st.fields, cols)}
-        )
-        return spark.createDataFrame(pdf, schema=st)
-    except Exception:  # pragma: no cover - defensive fallback
-        return spark.createDataFrame(rows, st)
+    cols = list(zip(*rows))
+    pdf = pd.DataFrame({f.name: list(c) for f, c in zip(st.fields, cols)})
+    return spark.createDataFrame(pdf, schema=st)

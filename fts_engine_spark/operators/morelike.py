@@ -36,6 +36,7 @@ from collections import Counter
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..query import QuerySpec
 from ..textproc.pipeline import get_pipeline
 
 __all__ = ["more_like_this", "more_like_this_point", "select_mlt_terms"]
@@ -137,16 +138,9 @@ def more_like_this(
     terms = select_mlt_terms(
         index, text, lang, preset, max_terms, min_tf, min_df
     )
-    if not terms:
-        return index._maybe_hydrate(
-            index._empty_bm25_result(), hydrate, bounded=True
-        )
-    mult = {t: 1 for t in terms}
     k_inner = k + 1 if k > 0 else 0
-    if mode == "relational":
-        out = index._bm25_relational(mult, k_inner, False)
-    else:
-        out = index._bm25_wand(mult, k_inner, False)
+    spec = QuerySpec.parse(dict.fromkeys(terms, 1), k=k_inner)
+    out = index._bm25_search(spec, mode, False)
     out = out.where(F.col("doc_id") != src).orderBy(
         F.desc("score"), F.asc("doc_id")
     )
@@ -187,14 +181,9 @@ def more_like_this_point(
     terms = select_mlt_terms(
         index, text, lang, preset, max_terms, min_tf, min_df
     )
-    if not terms:
-        return []
-    present = index._point_present(dict.fromkeys(terms, 1))
-    if not present:
-        return []
-    if not index._point_fits(present):
-        return fallback()
     k_inner = k + 1 if k > 0 else 0
-    hits = index._point_sweep(present, k_inner, 0)
-    hits = [(d, s) for d, s in hits if d != doc_id]
+    spec = QuerySpec.parse(dict.fromkeys(terms, 1), k=k_inner)
+    hits = [
+        (d, s) for d, s in index._point_serve(spec, fallback) if d != doc_id
+    ]
     return hits[:k] if k > 0 else hits

@@ -33,7 +33,7 @@ import threading
 import time
 from collections import OrderedDict
 from collections.abc import Iterable, Iterator
-from dataclasses import dataclass
+from dataclasses import dataclass, field, replace
 
 import numpy as np
 import pandas as pd
@@ -261,6 +261,113 @@ class _IncludeTooBig:
 
 
 _INCLUDE_TOO_BIG = _IncludeTooBig()
+
+
+def _group_masks(groups: Iterable[set[str]]) -> tuple[dict[str, int], int]:
+    """(term -> required-group bitmask, full mask). int64 masks cap the
+    group count at 63."""
+    groups = list(groups)
+    if len(groups) > 63:
+        raise ValueError(
+            f"too many required groups ({len(groups)}; int64 masks cap at 63)"
+        )
+    term_gmask: dict[str, int] = {}
+    for i, g in enumerate(groups):
+        for t in g:
+            term_gmask[t] = term_gmask.get(t, 0) | (1 << i)
+    return term_gmask, (1 << len(groups)) - 1
+
+
+@dataclass(frozen=True)
+class QuerySpec:
+    """One parsed BM25 query — the single representation every executor
+    runs: the distributed WAND kernel, the batch kernel, the point tier,
+    the federated scatter and the relational plan.
+
+    ``mult``: scoring term -> weight (multiplicity x boost) in query
+    order, excluded terms removed. ``excl``: NOT terms — their documents
+    are dropped. ``require_n``: a document must match at least this many
+    distinct scoring terms (AND is all of them, ``min_match`` fewer).
+    ``term_gmask`` / ``full_mask``: boolean MUST groups (see
+    :func:`_wand_sweep`). ``after``: the round-6 cursor. ``k`` /
+    ``offset``: the page; executors keep :attr:`k_eff` candidates."""
+
+    mult: dict[str, float]
+    excl: frozenset[str] = frozenset()
+    require_n: int = 0
+    term_gmask: dict[str, int] = field(default_factory=dict)
+    full_mask: int = 0
+    after: tuple[float, int] | None = None
+    k: int = 10
+    offset: int = 0
+
+    @classmethod
+    def parse(
+        cls,
+        mult: dict[str, float],
+        excl: Iterable[str] = (),
+        *,
+        k: int = 10,
+        offset: int = 0,
+        after: tuple[float, int] | None = None,
+        conjunctive: bool = False,
+        min_match: int | None = None,
+        groups: Iterable[set[str]] = (),
+    ) -> "QuerySpec | None":
+        """The one argument parser: validates the paging/matching
+        arguments, then builds the spec from the caller's normalized
+        term -> multiplicity map and NOT terms — or returns None when the
+        query is provably empty (no scoring term, more required matches
+        than terms, or a NOT of a term AND requires)."""
+        if min_match is not None and conjunctive:
+            raise ValueError("pass either conjunctive or min_match, not both")
+        if offset < 0:
+            raise ValueError(f"offset must be >= 0, got {offset}")
+        if after is not None:
+            if offset:
+                raise ValueError(
+                    "pass either offset or after (cursor), not both"
+                )
+            after = (_round6(float(after[0])), int(after[1]))
+        if not mult:
+            return None
+        require_n = len(mult) if conjunctive else max(0, int(min_match or 0))
+        if require_n > len(mult):
+            return None
+        excl = frozenset(excl)
+        if excl:
+            # an excluded term's docs are all dropped, so it never scores;
+            # under AND it makes the result empty
+            if conjunctive and excl & mult.keys():
+                return None
+            mult = {t: m for t, m in mult.items() if t not in excl}
+            if not mult:
+                return None
+        term_gmask, full_mask = _group_masks(groups)
+        return cls(
+            dict(mult), excl, require_n, term_gmask, full_mask, after, k,
+            offset,
+        )
+
+    @property
+    def k_eff(self) -> int:
+        """Candidates an executor keeps: the page plus the rows ``offset``
+        skips (k <= 0 is "return all")."""
+        return self.k + self.offset if (self.offset and self.k > 0) else self.k
+
+    def viable(self, terms: Iterable[str]) -> bool:
+        """Whether any document can match when only ``terms`` have
+        postings in a scope — the dictionary, one snapshot or one shard
+        (postings are doc-sharded, so a per-doc predicate a scope cannot
+        meet rules out every doc in it): some scoring term is present,
+        at least ``require_n`` of them, covering every MUST group."""
+        present = [t for t in terms if t in self.mult]
+        if not present or len(present) < self.require_n:
+            return False
+        cover = 0
+        for t in present:
+            cover |= self.term_gmask.get(t, 0)
+        return (cover & self.full_mask) == self.full_mask
 
 
 class IndexVersionError(RuntimeError):
@@ -2038,61 +2145,49 @@ class FtsIndex:
         postings is never decoded. Terms removed by ``exclude`` do not
         count toward the requirement.
         """
-        if min_match is not None and conjunctive:
-            raise ValueError("pass either conjunctive or min_match, not both")
-        if offset < 0:
-            raise ValueError(f"offset must be >= 0, got {offset}")
-        if after is not None:
-            if offset:
-                raise ValueError(
-                    "pass either offset or after (cursor), not both"
-                )
-            after = (_round6(float(after[0])), int(after[1]))
+        spec = self._bm25_spec(
+            query, preset, exclude, k=k, offset=offset, after=after,
+            conjunctive=conjunctive, min_match=min_match,
+        )
+        incl_df = self._within_df(within) if spec is not None else None
+        return self._bm25_search(spec, mode, hydrate, incl_df)
+
+    def _bm25_spec(
+        self, query: str, preset: str | None, exclude: str | None, **kw
+    ) -> "QuerySpec | None":
+        """:meth:`QuerySpec.parse` over this index's normalized query and
+        NOT strings (the search_bm25 family's argument rules)."""
         mult = self._query_mult(query, preset)
-        if not mult:
+        excl = self._query_mult(exclude, preset) if exclude else ()
+        return QuerySpec.parse(mult, excl, **kw)
+
+    def _bm25_search(
+        self,
+        spec: "QuerySpec | None",
+        mode: str,
+        hydrate: bool,
+        incl_df: DataFrame | None = None,
+    ) -> DataFrame:
+        """Run a spec distributed: the WAND plan when the restriction set
+        fits a driver array, else the relational plan (a semi-join
+        handles an oversized set distributed). Pagination fetches the top
+        ``k+offset`` and slices after the global merge; hydration waits
+        until after the slice so it joins one page."""
+        if spec is None:
             return self._maybe_hydrate(
                 self._empty_bm25_result(), hydrate, bounded=True
             )
-        excl = self._query_mult(exclude, preset) if exclude else {}
-        require_n = len(mult) if conjunctive else max(0, int(min_match or 0))
-        if require_n > len(mult):
-            # more distinct matches required than the query has terms
-            return self._maybe_hydrate(
-                self._empty_bm25_result(), hydrate, bounded=True
-            )
-        if excl:
-            if conjunctive and set(mult) & set(excl):
-                return self._maybe_hydrate(
-                    self._empty_bm25_result(), hydrate, bounded=True
-                )
-            mult = {t: m for t, m in mult.items() if t not in excl}
-            if not mult:
-                return self._maybe_hydrate(
-                    self._empty_bm25_result(), hydrate, bounded=True
-                )
-        incl_df = self._within_df(within)
-        # pagination: fetch the top k+offset, slice after the global merge
-        # (hydration waits until after the slice so it joins one page)
-        k_eff = k + offset if (offset and k > 0) else k
-        hyd_inner = hydrate and not offset
+        hyd_inner = hydrate and not spec.offset
         out = None
         if mode != "relational":
             incl_ids = self._within_ids(incl_df)
-            if incl_ids is None or incl_ids is not _INCLUDE_TOO_BIG:
-                out = self._bm25_wand(
-                    mult, k_eff, hyd_inner, require_n, excl, incl_ids,
-                    after=after,
-                )
+            if incl_ids is not _INCLUDE_TOO_BIG:
+                out = self._wand_search(spec, hyd_inner, incl_ids)
         if out is None:
-            # include set too large for a driver array — the relational
-            # semi-join handles it distributed
-            out = self._bm25_relational(
-                mult, k_eff, hyd_inner, require_n, excl, incl_df,
-                after=after,
-            )
-        if offset:
-            out = self._apply_offset(out, k, offset)
-            out = self._maybe_hydrate(out, hydrate, bounded=k > 0)
+            out = self._bm25_relational(spec, hyd_inner, incl_df)
+        if spec.offset:
+            out = self._apply_offset(out, spec.k, spec.offset)
+            out = self._maybe_hydrate(out, hydrate, bounded=spec.k > 0)
         return out
 
     def _apply_offset(self, scored: DataFrame, k: int, offset: int) -> DataFrame:
@@ -2315,12 +2410,9 @@ class FtsIndex:
         vals = self._field_values_local(field) if self._point_ready() else None
         if vals is None:
             return fallback()
-        present = self._point_present(self._query_mult(query, preset))
-        if not present:
-            return []
-        if not self._point_fits(present):
-            return fallback()
-        rows = self._point_sweep(present, 0, 0)
+        rows = self._point_serve(
+            QuerySpec.parse(self._query_mult(query, preset), k=0), fallback
+        )
         if not rows:
             return []
         ids = np.fromiter((d for d, _ in rows), dtype=np.int64, count=len(rows))
@@ -2535,21 +2627,6 @@ class FtsIndex:
         )
         return [r["term"] for r in rows]
 
-    def _expanded_search(
-        self,
-        mult: dict[str, int],
-        k: int,
-        mode: str,
-        hydrate: bool,
-    ) -> DataFrame:
-        if not mult:
-            return self._maybe_hydrate(
-                self._empty_bm25_result(), hydrate, bounded=True
-            )
-        if mode == "relational":
-            return self._bm25_relational(mult, k, hydrate)
-        return self._bm25_wand(mult, k, hydrate)
-
     def _expand(
         self,
         pattern: str,
@@ -2643,14 +2720,10 @@ class FtsIndex:
 
         if not self._point_ready():
             return fallback()
-        present = self._point_present(self._rewrite_mult(
+        mult = self._rewrite_mult(
             query, kind, preset, max_expand, point=True, **kw
-        ))
-        if not present:
-            return []
-        if not self._point_fits(present):
-            return fallback()
-        return self._point_sweep(present, k, 0)
+        )
+        return self._point_serve(QuerySpec.parse(mult, k=k), fallback)
 
     def search_bm25_regexp(
         self,
@@ -2681,7 +2754,7 @@ class FtsIndex:
         leading-wildcard caveat, one bounded lookup job here.
         """
         mult = self._rewrite_mult(query, "regexp", preset, max_expand)
-        return self._expanded_search(mult, k, mode, hydrate)
+        return self._bm25_search(QuerySpec.parse(mult, k=k), mode, hydrate)
 
     def search_bm25_wildcard(
         self,
@@ -2707,7 +2780,7 @@ class FtsIndex:
         job); patterns with a literal prefix prune like prefix queries.
         """
         mult = self._rewrite_mult(query, "wildcard", preset, max_expand)
-        return self._expanded_search(mult, k, mode, hydrate)
+        return self._bm25_search(QuerySpec.parse(mult, k=k), mode, hydrate)
 
     def search_bm25_prefix(
         self,
@@ -2731,7 +2804,7 @@ class FtsIndex:
         semantics of SQL ``term LIKE 'p%'`` against the same corpus.
         """
         mult = self._rewrite_mult(query, "prefix", preset, max_expand)
-        return self._expanded_search(mult, k, mode, hydrate)
+        return self._bm25_search(QuerySpec.parse(mult, k=k), mode, hydrate)
 
     def search_bm25_fuzzy(
         self,
@@ -2757,7 +2830,7 @@ class FtsIndex:
         mult = self._rewrite_mult(
             query, "fuzzy", preset, max_expand, max_dist=max_dist
         )
-        return self._expanded_search(mult, k, mode, hydrate)
+        return self._bm25_search(QuerySpec.parse(mult, k=k), mode, hydrate)
 
     # ---- synonym groups (Lucene SynonymQuery semantics) -----------------
 
@@ -3054,21 +3127,6 @@ class FtsIndex:
                 return None
         return mult, groups, excl
 
-    @staticmethod
-    def _group_masks(groups: list[set[str]]) -> tuple[dict[str, int], int]:
-        """(term -> required-group bitmask, full mask). int64 masks cap
-        the group count at 63."""
-        if len(groups) > 63:
-            raise ValueError(
-                f"too many required groups ({len(groups)}; int64 masks "
-                "cap at 63)"
-            )
-        term_gmask: dict[str, int] = {}
-        for i, g in enumerate(groups):
-            for t in g:
-                term_gmask[t] = term_gmask.get(t, 0) | (1 << i)
-        return term_gmask, (1 << len(groups)) - 1
-
     def search_boolean(
         self,
         query: str,
@@ -3117,15 +3175,9 @@ class FtsIndex:
             raise ValueError(f"offset must be >= 0, got {offset}")
         bq = parse_query(query)
         preset = self._query_preset(preset)
-
-        def empty() -> DataFrame:
-            return self._maybe_hydrate(
-                self._empty_bm25_result(), hydrate, bounded=True
-            )
-
         resolved = self._resolve_boolean(bq, preset, max_expand)
         if resolved is None:
-            return empty()
+            return self._bm25_search(None, mode, hydrate)
         mult, groups, excl = resolved
 
         incl_df = self._within_df(within)
@@ -3151,30 +3203,9 @@ class FtsIndex:
             # phrase/near terms contribute to the score like SHOULD terms
             for t in normalize_query(ph, preset):
                 mult[t] = mult.get(t, 0) + 1
-        if not mult:
-            # pure-negative / analyzer-empty query: nothing to score
-            return empty()
-
-        term_gmask, full_mask = self._group_masks(groups)
-        k_eff = k + offset if (offset and k > 0) else k
-        hyd_inner = hydrate and not offset
-        out = None
-        if mode != "relational":
-            incl_ids = self._within_ids(incl_df)
-            if incl_ids is None or incl_ids is not _INCLUDE_TOO_BIG:
-                out = self._bm25_wand(
-                    mult, k_eff, hyd_inner, 0, excl, incl_ids,
-                    term_gmask=term_gmask or None, full_mask=full_mask,
-                )
-        if out is None:
-            out = self._bm25_relational(
-                mult, k_eff, hyd_inner, 0, excl, incl_df,
-                term_gmask=term_gmask or None, full_mask=full_mask,
-            )
-        if offset:
-            out = self._apply_offset(out, k, offset)
-            out = self._maybe_hydrate(out, hydrate, bounded=k > 0)
-        return out
+        # pure-negative / analyzer-empty query: nothing to score (None)
+        spec = QuerySpec.parse(mult, excl, k=k, offset=offset, groups=groups)
+        return self._bm25_search(spec, mode, hydrate, incl_df)
 
     def search_bm25_batch(
         self,
@@ -3200,7 +3231,7 @@ class FtsIndex:
         (~250-400 ms at local[32]); a batch shares that floor across all
         queries AND shares posting decode — within a shard, a term common
         to several queries is decoded once (the kernel caches weight-free
-        base scores; see :func:`make_wand_batch_kernel`). Bulk workloads
+        base scores; see :func:`_batch_kernel`). Bulk workloads
         (query-log evaluation, offline relevance scoring) get throughput
         that per-query serving cannot reach.
 
@@ -3211,60 +3242,24 @@ class FtsIndex:
         """
         if excludes is not None and len(excludes) != len(queries):
             raise ValueError("excludes must be parallel to queries")
-        per_query: dict[int, dict[str, tuple[int, int]]] = {}
-        union_mult: dict[int, dict[str, int]] = {}
-        union_excl: dict[int, dict[str, int]] = {}
-        all_terms: set[str] = set()
+        specs: dict[int, QuerySpec] = {}
         for i, q in enumerate(queries):
-            m = self._query_mult(q, preset)
-            e = (
-                self._query_mult(excludes[i], preset)
-                if excludes is not None and excludes[i]
-                else {}
+            spec = self._bm25_spec(
+                q, preset, excludes[i] if excludes is not None else None,
+                k=k, conjunctive=conjunctive,
             )
-            if e:
-                if conjunctive and set(m) & set(e):
-                    m = {}  # NOT of a required term: provably empty
-                else:
-                    m = {t: mu for t, mu in m.items() if t not in e}
-            union_mult[i] = m
-            union_excl[i] = e
-            all_terms.update(m)
-            all_terms.update(e)
-        if not all_terms:
+            if spec is not None:
+                specs[i] = spec
+        terms = {t for sp in specs.values() for t in (*sp.mult, *sp.excl)}
+        # ONE lookup (none at all warm)
+        stats = self.term_stats(sorted(terms)) if terms else {}
+        specs = {i: sp for i, sp in specs.items() if sp.viable(stats)}
+        if not specs:
             return self.spark.range(0).select(
                 F.col("id").cast("int").alias("query_id"),
                 F.col("id").alias("doc_id"),
                 F.col("id").cast("double").alias("score"),
             )
-        stats = self.term_stats(sorted(all_terms))  # ONE lookup (or none, warm)
-        for i, m in union_mult.items():
-            pq = {
-                t: (mult, stats[t][0])
-                for t, mult in m.items()
-                if t in stats
-            }
-            if conjunctive and len(pq) < len(m):
-                # a corpus-absent term empties this query's AND result
-                continue
-            if pq:
-                per_query[i] = pq
-        per_query_excl = {
-            i: fs
-            for i, e in union_excl.items()
-            if i in per_query
-            and (fs := frozenset(t for t in e if t in stats))
-        }
-        if not per_query:
-            return self.spark.range(0).select(
-                F.col("id").cast("int").alias("query_id"),
-                F.col("id").alias("doc_id"),
-                F.col("id").cast("double").alias("score"),
-            )
-        live_terms = sorted(
-            {t for pq in per_query.values() for t in pq}
-            | {t for fs in per_query_excl.values() for t in fs}
-        )
         if self.n_deleted > self.dead_broadcast_max:
             raise RuntimeError(
                 f"{self.n_deleted} pending tombstones exceed "
@@ -3273,13 +3268,16 @@ class FtsIndex:
                 "Compact the index first, or run queries singly — "
                 "search_bm25 falls back to the relational anti-join plan"
             )
-        posts = self._pruner(self._read_postings(), live_terms)
+        live = {
+            t for sp in specs.values() for t in (*sp.mult, *sp.excl)
+            if t in stats
+        }
+        posts = self._pruner(self._read_postings(), sorted(live))
         if dict(posts.dtypes).get("shard_id") != "bigint":
             posts = posts.withColumn("shard_id", F.col("shard_id").cast("long"))
-        kernel = make_wand_batch_kernel(
-            self.n_docs, self.shard_size, self.avgdl, k, per_query,
-            conjunctive=conjunctive, per_query_excl=per_query_excl or None,
-            dead_bcast=self._dead_broadcast(),
+        kernel = _batch_kernel(
+            specs, {t: stats[t][0] for t in live}, self.n_docs,
+            self.avgdl, self.shard_size, self._dead_broadcast(),
         )
         local = posts.groupBy("shard_id").applyInPandas(
             kernel, schema=WAND_BATCH_SCHEMA
@@ -3508,14 +3506,6 @@ class FtsIndex:
             self._term_dict[t][0] <= cap for t in terms if t in self._term_dict
         )
 
-    def _point_present(self, mult: dict) -> dict[str, tuple]:
-        """term -> (mult, df) for the terms of ``mult`` in the dictionary."""
-        return {
-            t: (m, self._term_dict[t][0])
-            for t, m in mult.items()
-            if t in self._term_dict
-        }
-
     @staticmethod
     def _point_rows(df: DataFrame) -> list[tuple[int, float]]:
         """A distributed fallback's rows in the point surfaces' shape."""
@@ -3555,137 +3545,75 @@ class FtsIndex:
         set to doc ids is a Spark job, which defeats the point tier's
         no-job premise.
         """
+        spec = self._bm25_spec(
+            query, preset, exclude, k=k, offset=offset, after=after,
+            conjunctive=conjunctive, min_match=min_match,
+        )
 
         def fallback() -> list[tuple[int, float]]:
-            return self._point_rows(self.search_bm25(
-                query, k=k, preset=preset, mode="wand",
-                conjunctive=conjunctive, exclude=exclude, within=within,
-                min_match=min_match, offset=offset, after=after,
+            return self._point_rows(self._bm25_search(
+                spec, "wand", False, self._within_df(within)
             ))
 
         if within is not None or not self._point_ready():
             return fallback()
-        if min_match is not None and conjunctive:
-            raise ValueError("pass either conjunctive or min_match, not both")
-        if offset < 0:
-            raise ValueError(f"offset must be >= 0, got {offset}")
-        if after is not None:
-            if offset:
-                raise ValueError(
-                    "pass either offset or after (cursor), not both"
-                )
-            after = (_round6(float(after[0])), int(after[1]))
-        mult = self._query_mult(query, preset)
-        excl = self._query_mult(exclude, preset) if exclude else {}
-        require_n = len(mult) if conjunctive else max(0, int(min_match or 0))
-        if mult and require_n > len(mult):
+        return self._point_serve(spec, fallback)
+
+    def _point_serve(
+        self,
+        spec: "QuerySpec | None",
+        fallback,
+        incl_docs: "np.ndarray | None" = None,
+    ) -> list[tuple[int, float]]:
+        """A ready point tier's answer to a spec: empty when no document
+        can match, ``fallback()`` when a term's posting list exceeds the
+        point budget, else the in-process sweep."""
+        if spec is None:
             return []
-        if excl:
-            if conjunctive and set(mult) & set(excl):
-                return []
-            mult = {t: m for t, m in mult.items() if t not in excl}
-        present = self._point_present(mult)
-        excl_present = frozenset(t for t in excl if t in self._term_dict)
-        if not present or (require_n > 0 and len(present) < require_n):
+        present = [t for t in spec.mult if t in self._term_dict]
+        if not spec.viable(present):
             return []
-        if not self._point_fits([*present, *excl_present]):
+        if not self._point_fits([*present, *spec.excl]):
             return fallback()
-        k_eff = k + offset if (offset and k > 0) else k
-        rows = self._point_sweep(
-            present, k_eff, require_n, excl_present or None, after=after,
-        )
-        return rows[offset:] if offset else rows
+        return self._point_sweep(spec, incl_docs=incl_docs)
 
     def _point_sweep(
         self,
-        present: dict[str, tuple[int, int]],
-        k: int,
-        require_n: int,
-        excl_terms: frozenset[str] | None = None,
-        term_gmask: dict[str, int] | None = None,
-        full_mask: int = 0,
-        after: tuple[float, int] | None = None,
-        incl_docs: "np.ndarray | None" = None,
+        spec: QuerySpec,
+        df: dict[str, int] | None = None,
         n_docs: int | None = None,
         avgdl: float | None = None,
+        incl_docs: "np.ndarray | None" = None,
     ) -> list[tuple[int, float]]:
-        """In-process sweep over the point cache for a resolved
-        term -> (mult, df) map: fetch missing terms (one pruned job),
-        run the SAME per-shard WAND kernel the executors run, merge.
-        ``excl_terms`` are cached/fetched like scoring terms; their doc
-        ids (doc blob only) form per-shard exclusion sets.
-        ``term_gmask``/``full_mask`` are boolean MUST groups (see
-        :func:`_wand_sweep`); shards whose terms can't cover every
-        required group are skipped whole, like the distributed kernel.
+        """In-process execution of a spec over the point cache: fetch the
+        missing dictionary terms (one pruned job), run
+        :func:`_score_shard` — the scorer the executors run — on every
+        cached shard, merge the shard top-ks and slice the page.
         ``incl_docs`` (global sorted int64 array) is the field-filter
-        restriction — the same array the distributed kernel receives.
-        ``n_docs``/``avgdl`` override the index-local stats — the
+        restriction. ``df`` / ``n_docs`` / ``avgdl`` override the
+        index-local statistics, exactly like :meth:`_wand_plan` — the
         federated point tier scores every snapshot with the GLOBAL
-        constants, exactly like :meth:`_bm25_wand_stats`."""
-        eff_n_docs = self.n_docs if n_docs is None else int(n_docs)
-        eff_avgdl = self.avgdl if avgdl is None else float(avgdl)
+        values."""
+        present = [t for t in spec.mult if t in self._term_dict]
+        excl = sorted(t for t in spec.excl if t in self._term_dict)
+        if df is None:
+            df = {t: self._term_dict[t][0] for t in present}
+        n_docs = self.n_docs if n_docs is None else int(n_docs)
+        avgdl = self.avgdl if avgdl is None else float(avgdl)
+        k = spec.k_eff
         with self._point_lock:
-            self._point_pin(
-                list(dict.fromkeys(list(present) + sorted(excl_terms or ())))
-            )
-            # per-shard sweep, exactly the distributed kernel's unit of
-            # work; global merge = top-k of the union of shard top-ks
-            # term-ASCENDING weighted lists: the distributed kernel sees
-            # rows in the warm cache's (shard, term) sort order, and float
-            # summation order must match for bit-identical scores
-            shards: dict[int, list[tuple[float, dict]]] = {}
-            shard_gms: dict[int, list[int]] = {}
-            for term in sorted(present):
-                m, df_ = present[term]
-                w = m * bm25_idf(eff_n_docs, df_)
-                gm = term_gmask.get(term, 0) if term_gmask else 0
+            self._point_pin(list(dict.fromkeys(present + excl)))
+            by_shard: dict[int, dict[str, dict]] = {}
+            for term in present + excl:
                 for shard, table in self._point_cache[term].items():
-                    shards.setdefault(shard, []).append((w, table))
-                    shard_gms.setdefault(shard, []).append(gm)
-            excl_by_shard: dict[int, np.ndarray] = {}
-            if excl_terms:
-                parts: dict[int, list[np.ndarray]] = {}
-                for term in sorted(excl_terms):
-                    for shard, table in self._point_cache[term].items():
-                        parts.setdefault(shard, []).append(
-                            _decode_doc_ids(
-                                table, shard * self.shard_size, None
-                            )
-                        )
-                excl_by_shard = {
-                    s: np.unique(np.concatenate(a)) for s, a in parts.items()
-                }
+                    by_shard.setdefault(shard, {})[term] = table
             dead = self._dead_ids()
             heap: list[tuple[float, int]] = []
-            for shard, weighted in shards.items():
-                gms = shard_gms.get(shard, [])
-                if full_mask:
-                    shard_mask = 0
-                    for gm in gms:
-                        shard_mask |= gm
-                    if (shard_mask & full_mask) != full_mask:
-                        # a required group has no postings in this shard
-                        continue
-                base = shard * self.shard_size
-                if incl_docs is not None:
-                    # whole-shard skip: no include id in this shard's
-                    # doc-id range means nothing here can survive
-                    j = int(np.searchsorted(incl_docs, base))
-                    if j >= incl_docs.size or (
-                        int(incl_docs[j]) >= base + self.shard_size
-                    ):
-                        continue
-                # same slice+union the distributed kernel applies, so the
-                # tiers stay bit-identical under pending deletes
-                excl = _merge_dead(
-                    excl_by_shard.get(shard), dead,
-                    base, self.shard_size,
-                )
-                docs, scores = _wand_sweep(
-                    weighted, k, base, eff_avgdl, None,
-                    require_n, excl, incl_docs,
-                    group_masks=gms if full_mask else None,
-                    full_mask=full_mask, after=after,
+            for shard, tables in by_shard.items():
+                docs, scores = _score_shard(
+                    spec, tables, df, n_docs, avgdl,
+                    shard * self.shard_size, self.shard_size, dead,
+                    incl_docs,
                 )
                 for doc, sc in zip(docs.tolist(), scores.tolist()):
                     if k <= 0 or len(heap) < k:
@@ -3698,7 +3626,7 @@ class FtsIndex:
             self._point_evict(frozenset())
         out = [(-d, s) for s, d in heap]
         out.sort(key=lambda x: (-x[1], x[0]))
-        return [(int(d), float(s)) for d, s in out]
+        return [(int(d), float(s)) for d, s in out][spec.offset:]
 
     # ---- point-tier dictionary expansion (prefix / fuzzy, no Spark job)
 
@@ -3911,26 +3839,8 @@ class FtsIndex:
         for ph, _slop in [(p, 0) for p in bq.phrases] + list(bq.near):
             for t in normalize_query(ph, preset):
                 mult[t] = mult.get(t, 0) + 1
-        term_gmask, full_mask = self._group_masks(groups)
-        present = self._point_present(mult)
-        if not present:
-            return []
-        if full_mask:
-            covered = 0
-            for t in present:
-                covered |= term_gmask.get(t, 0)
-            if (covered & full_mask) != full_mask:
-                # a required group has no term in the dictionary
-                return []
-        excl_present = frozenset(t for t in excl if t in self._term_dict)
-        if not self._point_fits([*present, *excl_present]):
-            return fallback()
-        k_eff = k + offset if (offset and k > 0) else k
-        rows = self._point_sweep(
-            present, k_eff, 0, excl_present or None,
-            term_gmask, full_mask, incl_docs=incl_docs,
-        )
-        return rows[offset:] if offset else rows
+        spec = QuerySpec.parse(mult, excl, k=k, offset=offset, groups=groups)
+        return self._point_serve(spec, fallback, incl_docs)
 
     def point_cache_stats(self) -> dict[str, int]:
         return {
@@ -4001,30 +3911,28 @@ class FtsIndex:
 
     def _bm25_relational(
         self,
-        mult: dict[str, int],
-        k: int,
+        spec: QuerySpec,
         hydrate: bool,
-        require_n: int = 0,
-        excl_mult: dict[str, int] | None = None,
         incl_df: DataFrame | None = None,
-        term_gmask: dict[str, int] | None = None,
-        full_mask: int = 0,
-        after: tuple[float, int] | None = None,
     ) -> DataFrame:
-        scored = self._bm25_scored(mult, require_n, term_gmask, full_mask)
-        if after is not None:
+        scored = self._bm25_scored(
+            spec.mult, spec.require_n, spec.term_gmask, spec.full_mask
+        )
+        if spec.after is not None:
             # cursor pagination at the serving order's own precision
             # (round-6, matching _after_keep's kernel-side mask)
+            cs, cd = spec.after
             s6 = F.round(F.col("score"), 6)
             scored = scored.where(
-                (s6 < F.lit(after[0]))
-                | ((s6 == F.lit(after[0])) & (F.col("doc_id") > F.lit(after[1])))
+                (s6 < F.lit(cs))
+                | ((s6 == F.lit(cs)) & (F.col("doc_id") > F.lit(cd)))
             )
-        if excl_mult:
+        if spec.excl:
             # NOT: anti-join the doc-blob-only match set of the excluded
             # terms (same decode path as the pre-truncation count)
             scored = scored.join(
-                self._match_count_df(excl_mult), "doc_id", "left_anti"
+                self._match_count_df(dict.fromkeys(sorted(spec.excl), 1)),
+                "doc_id", "left_anti",
             )
         if incl_df is not None:
             # restriction filter, fully distributed (no driver id array):
@@ -4033,44 +3941,47 @@ class FtsIndex:
         scored = scored.orderBy(
             F.desc("score"), F.asc("doc_id")
         )
+        k = spec.k_eff
         if k > 0:
             scored = scored.limit(k)
         return self._maybe_hydrate(scored, hydrate, bounded=k > 0)
 
     def _bm25_wand(
         self,
-        mult: dict[str, int],
+        mult: dict[str, float],
         k: int,
         hydrate: bool,
         require_n: int = 0,
-        excl_mult: dict[str, int] | None = None,
-        incl_ids: np.ndarray | None = None,
-        term_gmask: dict[str, int] | None = None,
-        full_mask: int = 0,
-        after: tuple[float, int] | None = None,
     ) -> DataFrame:
-        """Document-partitioned block-max WAND: each shard's posting rows for
-        the query terms are processed by one kernel that decodes only the
-        skip blocks whose upper-bound sum can beat the running threshold.
+        """WAND top-k for an already-analyzed term -> weight map (OR; at
+        least ``require_n`` distinct terms when set) — for operators and
+        rewrites that select their terms without a query string."""
+        spec = QuerySpec.parse(mult, k=k, min_match=require_n)
+        if spec is None:
+            return self._maybe_hydrate(
+                self._empty_bm25_result(), hydrate, bounded=True
+            )
+        return self._wand_search(spec, hydrate)
 
-        Cold: single Spark job — df stats ride in on a broadcast join, idf
-        computed in-kernel from (df, n_docs). Warm + driver dictionary: the
-        (mult, df) map travels INSIDE the kernel closure, so the plan is
-        just cache-scan → filter → applyInPandas → TakeOrdered — zero
-        broadcast stages and zero exchanges per query (the cache is
-        pre-partitioned by shard_id)."""
-        excl_mult = excl_mult or {}
+    def _wand_search(
+        self,
+        spec: QuerySpec,
+        hydrate: bool,
+        incl_ids: np.ndarray | None = None,
+    ) -> DataFrame:
+        """Document-partitioned block-max WAND for a spec (see
+        :meth:`_wand_plan`), hydrated on request. Past
+        ``dead_broadcast_max`` pending deletes the relational plan serves
+        instead: it anti-joins the tombstone TABLE (identical results,
+        hash-proven), where the kernel would need the id array."""
         if self.n_deleted > self.dead_broadcast_max:
-            # too many pending deletes for the sorted-id broadcast; the
-            # relational plan anti-joins the tombstone TABLE instead
-            # (identical results, hash-proven) — and compact_index is due
             import warnings
 
             warnings.warn(
                 f"{self.n_deleted} pending deletes exceed "
                 f"dead_broadcast_max={self.dead_broadcast_max}; serving "
                 "via the relational plan — run compact_index",
-                stacklevel=3,
+                stacklevel=4,
             )
             incl_df = None
             if incl_ids is not None:
@@ -4080,44 +3991,47 @@ class FtsIndex:
                 incl_df = self.spark.createDataFrame(
                     [(int(d),) for d in incl_ids], "doc_id long"
                 )
-            return self._bm25_relational(
-                mult, k, hydrate, require_n, excl_mult, incl_df,
-                term_gmask=term_gmask, full_mask=full_mask, after=after,
-            )
-        dead_bc = self._dead_broadcast()
-        incl_bc = (
-            self.spark.sparkContext.broadcast(incl_ids)
-            if incl_ids is not None
-            else None
-        )
-        # (mult, df) per present term: driver-dict lookups when warm, ONE
-        # pruned terms-table lookup otherwise — both feed the kernel
-        # CLOSURE. The former cold path attached the stats via two
-        # broadcast joins (~250-300 ms of fixed cost each, measured r6);
-        # now cold and warm run the same zero-broadcast plan shape.
-        stats_all = self.term_stats(list(mult) + list(excl_mult))
-        present = {
-            t: (m, stats_all[t][0]) for t, m in mult.items() if t in stats_all
-        }
-        if not present or (require_n > 0 and len(present) < require_n):
-            # conjunctive: a query term absent from the corpus can
-            # never be matched — the whole result is empty, no job
-            return self._maybe_hydrate(
-                self._empty_bm25_result(), hydrate, bounded=True
-            )
-        if full_mask and term_gmask:
-            covered = 0
-            for t in present:
-                covered |= term_gmask.get(t, 0)
-            if (covered & full_mask) != full_mask:
-                # a required group has no term in the dictionary:
-                # nothing can match — empty result, no job
-                return self._maybe_hydrate(
-                    self._empty_bm25_result(), hydrate, bounded=True
-                )
-        excl_present = [t for t in excl_mult if t in stats_all]
+            return self._bm25_relational(spec, hydrate, incl_df)
+        # (mult, df) of every present term: driver-dict lookups when warm,
+        # ONE pruned terms-table lookup otherwise — both feed the kernel
+        # CLOSURE, so cold and warm run the same zero-broadcast plan
+        stats = self.term_stats([*spec.mult, *sorted(spec.excl)])
+        if spec.viable(stats):
+            out = self._wand_plan(spec, stats, incl_ids=incl_ids)
+        else:
+            # a term AND/min_match/a MUST group needs is absent from the
+            # corpus: nothing can match — empty result, no job
+            out = self._empty_bm25_result()
+        return self._maybe_hydrate(out, hydrate, bounded=spec.k_eff > 0)
+
+    def _wand_plan(
+        self,
+        spec: QuerySpec,
+        stats: dict[str, tuple[int, int]],
+        df: dict[str, int] | None = None,
+        n_docs: int | None = None,
+        avgdl: float | None = None,
+        incl_ids: np.ndarray | None = None,
+    ) -> DataFrame:
+        """The one WAND plan: pruned posting scan of the spec's terms this
+        index holds (``stats``: term -> (df, cf) from :meth:`term_stats`)
+        -> one applyInPandas kernel per shard (:func:`_shard_kernel`) ->
+        global (score desc, doc_id asc) top-k, unhydrated. Callers first
+        check :meth:`QuerySpec.viable` against ``stats``.
+
+        ``df`` / ``n_docs`` / ``avgdl`` override the index-local
+        statistics — the federated scatter scores every snapshot with the
+        GLOBAL values. Warm, the plan is cache-scan -> filter ->
+        applyInPandas -> TakeOrdered: the weights ride the kernel closure
+        and tombstones / the include set ride broadcast variables, so
+        there is no broadcast stage and no exchange (the cache is
+        pre-partitioned by shard_id)."""
+        if df is None:
+            df = {t: stats[t][0] for t in spec.mult if t in stats}
         posts = self._pruner(
-            self._read_postings(), list(present) + excl_present
+            self._read_postings(),
+            [t for t in spec.mult if t in stats]
+            + sorted(spec.excl & stats.keys()),
         )
         if dict(posts.dtypes).get("shard_id") != "bigint":
             posts = posts.withColumn(
@@ -4128,82 +4042,21 @@ class FtsIndex:
             # the shard count (see _agg_parts) — the warm cache is already
             # shard-partitioned and skips the exchange entirely
             posts = posts.repartition(self._agg_parts(), "shard_id")
-        kernel = make_wand_kernel(
-            self.n_docs, self.shard_size, self.avgdl, k,
-            term_stats=present, require_n=require_n,
-            exclude_terms=frozenset(excl_present) or None,
-            dead_bcast=dead_bc, include_bcast=incl_bc,
-            term_gmask=term_gmask, full_mask=full_mask, after=after,
-        )
-        local_topk = posts.groupBy("shard_id").applyInPandas(
-            kernel, schema=WAND_SCHEMA
-        )
-        out = local_topk.orderBy(F.desc("score"), F.asc("doc_id"))
-        if k > 0:
-            out = out.limit(k)
-        return self._maybe_hydrate(out, hydrate, bounded=k > 0)
-
-    def _bm25_wand_stats(
-        self,
-        present: dict[str, tuple[float, int]],
-        k: int,
-        *,
-        n_docs: int,
-        avgdl: float,
-        require_n: int = 0,
-        excl_terms: "frozenset[str] | None" = None,
-        incl_ids: "np.ndarray | None" = None,
-    ) -> DataFrame:
-        """Per-shard block-max WAND scored against EXTERNALLY-SUPPLIED
-        global stats — the scatter half of federated (multi-snapshot)
-        search. ``present`` maps term -> (mult, GLOBAL df), already
-        restricted to terms this sub-index actually contains; ``n_docs``
-        / ``avgdl`` are the corpus-wide values aggregated across all
-        sub-indexes by :class:`fts_engine_spark.federated.FederatedFtsIndex`.
-
-        Same plan as the warm :meth:`_bm25_wand` branch (pruned posting
-        scan -> one applyInPandas kernel per shard -> local top-k) —
-        only the closure constants differ, so the per-sub cost of a
-        federated query equals a single-index query. Returns the
-        UNHYDRATED sub-local top-k (doc_id, score); doc ids are dense
-        PER SUB-INDEX and must be mapped to urls before any cross-sub
-        merge. Tombstones are honored via the same sorted-id broadcast;
-        above ``dead_broadcast_max`` pending deletes the sub must be
-        compacted first (the single-index relational fallback has no
-        stats-override twin — fail loudly rather than mis-score)."""
-        if self.n_deleted > self.dead_broadcast_max:
-            raise RuntimeError(
-                f"{self.n_deleted} pending deletes exceed "
-                f"dead_broadcast_max={self.dead_broadcast_max}; run "
-                "compact_index on this sub-index before federated serving"
-            )
-        if not present:
-            return self._empty_bm25_result()
-        dead_bc = self._dead_broadcast()
         incl_bc = (
             self.spark.sparkContext.broadcast(incl_ids)
             if incl_ids is not None
             else None
         )
-        excl_list = sorted(excl_terms or ())
-        posts = self._pruner(
-            self._read_postings(), list(present) + excl_list
+        kernel = _shard_kernel(
+            spec, df,
+            self.n_docs if n_docs is None else int(n_docs),
+            self.avgdl if avgdl is None else float(avgdl),
+            self.shard_size, self._dead_broadcast(), incl_bc,
         )
-        if dict(posts.dtypes).get("shard_id") != "bigint":
-            posts = posts.withColumn("shard_id", F.col("shard_id").cast("long"))
-        kernel = make_wand_kernel(
-            n_docs, self.shard_size, avgdl, k,
-            term_stats=present, require_n=require_n,
-            exclude_terms=frozenset(excl_list) or None,
-            dead_bcast=dead_bc, include_bcast=incl_bc,
-        )
-        local_topk = posts.groupBy("shard_id").applyInPandas(
+        out = posts.groupBy("shard_id").applyInPandas(
             kernel, schema=WAND_SCHEMA
-        )
-        out = local_topk.orderBy(F.desc("score"), F.asc("doc_id"))
-        if k > 0:
-            out = out.limit(k)
-        return out
+        ).orderBy(F.desc("score"), F.asc("doc_id"))
+        return out.limit(spec.k_eff) if spec.k_eff > 0 else out
 
     def _maybe_hydrate(
         self, scored: DataFrame, hydrate: bool, bounded: bool = True
@@ -4399,6 +4252,49 @@ def _decode_term_block(t: dict, j: int, base: int, avgdl: float, counters):
 _DENSE_TERM_THRESHOLD = 8
 
 
+def _admit(
+    uniq: np.ndarray,
+    acc: np.ndarray,
+    inv: np.ndarray,
+    gmasks: np.ndarray | None,
+    full_mask: int,
+    require_n: int,
+    excl_docs: np.ndarray | None,
+    incl_docs: np.ndarray | None,
+    after: tuple[float, int] | None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The candidate filter over accumulated docs, shared by both sweep
+    executions: ``uniq``/``acc`` are the distinct doc ids and summed
+    scores, ``inv`` maps each posting to its doc and ``gmasks`` holds
+    each posting's group mask. Keeps docs whose matched terms cover every
+    MUST group, that match ``require_n`` distinct terms (postings are
+    unique per (term, doc), so a bincount over ``inv`` is the distinct
+    match count), that are not excluded, that are in the include set, and
+    that sort after the cursor. Every test only REMOVES candidates, which
+    is what keeps theta pruning conservative."""
+    keep = np.ones(len(uniq), dtype=bool)
+    if full_mask:
+        gacc = np.zeros(len(uniq), dtype=np.int64)
+        np.bitwise_or.at(gacc, inv, gmasks)
+        keep &= (gacc & full_mask) == full_mask
+    if require_n > 0:
+        keep &= np.bincount(inv, minlength=len(uniq)) >= require_n
+    if excl_docs is not None and excl_docs.size:
+        pos = np.minimum(np.searchsorted(excl_docs, uniq), excl_docs.size - 1)
+        keep &= excl_docs[pos] != uniq
+    if incl_docs is not None:
+        if not incl_docs.size:
+            keep[:] = False
+        else:
+            pos = np.minimum(
+                np.searchsorted(incl_docs, uniq), incl_docs.size - 1
+            )
+            keep &= incl_docs[pos] == uniq
+    if after is not None:
+        keep &= _after_keep(uniq, acc, after)
+    return uniq[keep], acc[keep]
+
+
 def _dense_accumulate(
     weighted: list[tuple[float, dict]],
     k: int,
@@ -4436,28 +4332,10 @@ def _dense_accumulate(
     uniq, inv = np.unique(d, return_inverse=True)
     acc = np.zeros(len(uniq))
     np.add.at(acc, inv, s)
-    keep = np.ones(len(uniq), dtype=bool)
-    if full_mask:
-        gacc = np.zeros(len(uniq), dtype=np.int64)
-        np.bitwise_or.at(gacc, inv, np.concatenate(gmasks_l))
-        keep &= (gacc & full_mask) == full_mask
-    if require_n > 0:
-        keep &= np.bincount(inv, minlength=len(uniq)) >= require_n
-    if excl_docs is not None and excl_docs.size:
-        pos = np.minimum(np.searchsorted(excl_docs, uniq), excl_docs.size - 1)
-        keep &= excl_docs[pos] != uniq
-    if incl_docs is not None:
-        if incl_docs.size:
-            pos = np.minimum(
-                np.searchsorted(incl_docs, uniq), incl_docs.size - 1
-            )
-            keep &= incl_docs[pos] == uniq
-        else:
-            keep &= False
-    uniq, acc = uniq[keep], acc[keep]
-    if after is not None and uniq.size:
-        keep = _after_keep(uniq, acc, after)
-        uniq, acc = uniq[keep], acc[keep]
+    uniq, acc = _admit(
+        uniq, acc, inv, np.concatenate(gmasks_l) if full_mask else None,
+        full_mask, require_n, excl_docs, incl_docs, after,
+    )
     if k > 0 and len(uniq) > k:
         order = np.lexsort((uniq, -acc))[:k]
         uniq, acc = uniq[order], acc[order]
@@ -4536,6 +4414,12 @@ def _wand_sweep(
             weighted, k, base, avgdl, counters, require_n,
             excl_docs, incl_docs, group_masks, full_mask, after,
         )
+    # whether any candidate filter applies (skips _admit per segment)
+    filtered = bool(
+        full_mask or require_n > 0 or after is not None
+        or incl_docs is not None
+        or (excl_docs is not None and excl_docs.size)
+    )
     bounds = np.unique(
         np.concatenate(
             [t["first"] for _, t in weighted]
@@ -4603,45 +4487,12 @@ def _wand_sweep(
         uniq, inv = np.unique(d, return_inverse=True)
         acc = np.zeros(len(uniq))
         np.add.at(acc, inv, s)
-        if full_mask or require_n > 0:
-            keep = np.ones(len(uniq), dtype=bool)
-            if full_mask:
-                # per-doc OR of matched terms' group masks must cover
-                # every required group (postings unique per (term, doc))
-                gacc = np.zeros(len(uniq), dtype=np.int64)
-                np.bitwise_or.at(gacc, inv, np.concatenate(seg_gmasks))
-                keep &= (gacc & full_mask) == full_mask
-            if require_n > 0:
-                # each term contributes <= 1 posting per doc, so the
-                # bincount over inv IS the distinct-match count per doc
-                keep &= np.bincount(inv, minlength=len(uniq)) >= require_n
-            if not keep.any():
-                continue
-            uniq, acc = uniq[keep], acc[keep]
-        if excl_docs is not None and excl_docs.size and uniq.size:
-            pos = np.minimum(
-                np.searchsorted(excl_docs, uniq), excl_docs.size - 1
+        if filtered:
+            uniq, acc = _admit(
+                uniq, acc, inv,
+                np.concatenate(seg_gmasks) if full_mask else None,
+                full_mask, require_n, excl_docs, incl_docs, after,
             )
-            keep = excl_docs[pos] != uniq
-            if not keep.any():
-                continue
-            uniq, acc = uniq[keep], acc[keep]
-        if incl_docs is not None and uniq.size:
-            if incl_docs.size:
-                pos = np.minimum(
-                    np.searchsorted(incl_docs, uniq), incl_docs.size - 1
-                )
-                keep = incl_docs[pos] == uniq
-            else:
-                keep = np.zeros(len(uniq), dtype=bool)
-            if not keep.any():
-                continue
-            uniq, acc = uniq[keep], acc[keep]
-        if after is not None and uniq.size:
-            keep = _after_keep(uniq, acc, after)
-            if not keep.any():
-                continue
-            uniq, acc = uniq[keep], acc[keep]
         for doc, sc in zip(uniq.tolist(), acc.tolist()):
             if k <= 0 or len(heap) < k:
                 heapq.heappush(heap, (sc, -doc))
@@ -4681,6 +4532,105 @@ def _merge_dead(
     return np.union1d(excl_docs, shard_dead)
 
 
+def _score_shard(
+    spec: QuerySpec,
+    tables: dict[str, dict],
+    df: dict[str, int],
+    n_docs: int,
+    avgdl: float,
+    base: int,
+    shard_size: int,
+    dead: np.ndarray | None = None,
+    incl: np.ndarray | None = None,
+    counters: dict[str, int] | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """One shard's local top-``spec.k_eff`` (doc_ids, scores) — the
+    per-shard scorer every executor runs (the distributed and batch
+    kernels per posting group, the point tier per cached shard).
+
+    ``tables``: the shard's block tables by term (scoring and NOT terms);
+    ``df``: term -> document frequency weighting the scoring terms
+    (index-local, or a federation's global counts); ``dead`` / ``incl``:
+    the GLOBAL sorted tombstone and include arrays, sliced here.
+
+    Terms are weighted in ascending term order, so per-doc float sums —
+    and therefore scores, to the last bit — do not depend on row arrival
+    or query-word order. Shard-level skips come before any decode:
+    postings are doc-sharded, so a shard without an included doc, or
+    whose terms cannot meet ``require_n`` or cover every MUST group,
+    holds no match. NOT terms decode their doc blob only."""
+    empty = (np.zeros(0, dtype=np.int64), np.zeros(0))
+    incl_docs = None
+    if incl is not None:
+        lo = int(np.searchsorted(incl, base))
+        hi = int(np.searchsorted(incl, base + shard_size))
+        if hi <= lo:
+            return empty
+        incl_docs = incl[lo:hi]
+    scoring = sorted(t for t in spec.mult if t in tables)
+    if not spec.viable(scoring):
+        return empty
+    weighted = [
+        (float(spec.mult[t]) * bm25_idf(n_docs, int(df[t])), tables[t])
+        for t in scoring
+    ]
+    arrs = [
+        _decode_doc_ids(tables[t], base, counters)
+        for t in sorted(spec.excl)
+        if t in tables
+    ]
+    excl_docs = _merge_dead(
+        np.unique(np.concatenate(arrs)) if arrs else None,
+        dead, base, shard_size,
+    )
+    gmasks = [spec.term_gmask.get(t, 0) for t in scoring]
+    return _wand_sweep(
+        weighted, spec.k_eff, base, avgdl, counters, spec.require_n,
+        excl_docs, incl_docs, gmasks if spec.full_mask else None,
+        spec.full_mask, spec.after,
+    )
+
+
+def _bcast_value(bcast):
+    return None if bcast is None else bcast.value
+
+
+def _shard_kernel(
+    spec: QuerySpec,
+    df: dict[str, int] | None,
+    n_docs: int,
+    avgdl: float,
+    shard_size: int,
+    dead_bcast=None,
+    include_bcast=None,
+    counters: dict[str, int] | None = None,
+):
+    """The applyInPandas kernel: one shard's posting rows -> its local
+    top-k ``(doc_id, score)`` under ``spec`` (see :func:`_score_shard`).
+    ``df=None``: the rows carry their own ``mult`` / ``df`` columns, and
+    every non-NOT row scores."""
+
+    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        if len(pdf) == 0:
+            return pd.DataFrame({"doc_id": [], "score": []})
+        base = int(pdf["shard_id"].iloc[0]) * shard_size
+        tables = _parse_term_rows(pdf, base, counters)
+        sp, dfs = spec, df
+        if dfs is None:
+            sp = replace(spec, mult={
+                t: tab["row_mult"] for t, tab in tables.items()
+                if t not in spec.excl
+            })
+            dfs = {t: tab["row_df"] for t, tab in tables.items()}
+        docs, scores = _score_shard(
+            sp, tables, dfs, n_docs, avgdl, base, shard_size,
+            _bcast_value(dead_bcast), _bcast_value(include_bcast), counters,
+        )
+        return pd.DataFrame({"doc_id": docs, "score": scores})
+
+    return kernel
+
+
 def make_wand_kernel(
     n_docs: int,
     shard_size: int,
@@ -4696,33 +4646,13 @@ def make_wand_kernel(
     full_mask: int = 0,
     after: tuple[float, int] | None = None,
 ):
-    """Build the per-shard block-max WAND applyInPandas kernel.
-
-    ``after``: cursor pagination — only docs strictly after the
-    ``(round6(score), doc_id)`` cursor are admitted (see
-    :func:`_after_keep`); each shard's local top-k is then the top-k of
-    its admissible docs, so the global merge is exact.
-
-    ``term_gmask`` / ``full_mask``: boolean MUST-group constraints (see
-    :func:`_wand_sweep`) — per-term bitmasks of required-group
-    membership. Postings are doc-sharded, so a shard whose terms don't
-    cover every required group rules out all its docs before any decode.
-
-    ``exclude_terms``: boolean NOT — posting rows whose term is in the set
-    never score; their doc ids (doc blob only, tf/dl untouched) form a
-    per-shard exclusion set applied inside :func:`_wand_sweep`. Exclusion
-    is shard-local (postings are doc-sharded), so NOT costs zero extra
-    shuffles.
-
-    ``term_stats`` ({term: (mult, df)}) rides in the closure when the
-    driver holds the dictionary (warm serving mode) — the input rows then
-    need no mult/df columns and the per-query plan has no broadcast.
-
-    Machinery shared with :func:`make_wand_batch_kernel` (see
-    ``_parse_term_rows`` / ``_wand_sweep``): per-term block tables cache
-    WEIGHT-FREE base scores, block-partially decoded via the stored byte
-    offsets — a skipped block is never decoded (VERDICT r3 #1); lists of
-    <=2 blocks take the full-blob decode.
+    """The per-shard block-max WAND applyInPandas kernel, from keyword
+    arguments: a :class:`QuerySpec` of ``term_stats`` ({term: (mult,
+    df)}; None = the rows carry mult/df columns), ``require_n``,
+    ``exclude_terms`` (NOT), ``term_gmask`` / ``full_mask`` (MUST
+    groups) and ``after`` (cursor), scored by :func:`_score_shard`.
+    ``dead_bcast`` / ``include_bcast`` are broadcasts of the sorted
+    tombstone and include arrays.
 
     ``counters`` (optional dict, mutated in place) records
     ``blocks_decoded`` / ``blocks_total`` / ``full_decodes`` /
@@ -4730,67 +4660,60 @@ def make_wand_kernel(
     call the kernel function directly); in executors each Python worker
     mutates its own copy, which is discarded.
     """
+    spec = QuerySpec(
+        {t: m for t, (m, _df) in (term_stats or {}).items()},
+        frozenset(exclude_terms or ()), require_n, dict(term_gmask or {}),
+        full_mask, after, k,
+    )
+    df = (
+        None if term_stats is None
+        else {t: d for t, (_m, d) in term_stats.items()}
+    )
+    return _shard_kernel(
+        spec, df, n_docs, avgdl, shard_size, dead_bcast, include_bcast,
+        counters,
+    )
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+
+def _batch_kernel(
+    specs: dict[int, QuerySpec],
+    df: dict[str, int],
+    n_docs: int,
+    avgdl: float,
+    shard_size: int,
+    dead_bcast=None,
+    counters: dict[str, int] | None = None,
+):
+    """Batch applyInPandas kernel: every query of ``specs`` scored over ONE
+    parse of the shard's posting rows. A term common to several queries
+    is decoded once (block caches hold weight-free base scores; each
+    query applies its own mult*idf), and the whole batch is one Spark
+    job. Emits (query_id, doc_id, score) local top-k rows per shard."""
+
+    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) == 0:
-            return pd.DataFrame({"doc_id": [], "score": []})
-        shard_id = int(pdf["shard_id"].iloc[0])
-        base = shard_id * shard_size
-        term_map = _parse_term_rows(pdf, base, counters)
-
-        excl_docs = None
-        if exclude_terms:
-            arrs = [
-                _decode_doc_ids(t, base, counters)
-                for term in sorted(exclude_terms)
-                if (t := term_map.pop(term, None)) is not None
-            ]
-            if arrs:
-                excl_docs = np.unique(np.concatenate(arrs))
-        if dead_bcast is not None:
-            excl_docs = _merge_dead(
-                excl_docs, dead_bcast.value, base, shard_size
+            return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
+        base = int(pdf["shard_id"].iloc[0]) * shard_size
+        tables = _parse_term_rows(pdf, base, counters)
+        dead = _bcast_value(dead_bcast)
+        qids, docs_out, scores_out = [], [], []
+        for qid in sorted(specs):
+            docs, scores = _score_shard(
+                specs[qid], tables, df, n_docs, avgdl, base, shard_size,
+                dead, None, counters,
             )
-        incl_docs = None
-        if include_bcast is not None:
-            incl = include_bcast.value
-            lo = int(np.searchsorted(incl, base))
-            hi = int(np.searchsorted(incl, base + shard_size))
-            if hi <= lo:
-                # restriction filter has no doc in this shard: nothing to
-                # decode or sweep at all
-                return pd.DataFrame({"doc_id": [], "score": []})
-            incl_docs = incl[lo:hi]
+            qids.append(np.full(len(docs), qid, dtype=np.int32))
+            docs_out.append(docs)
+            scores_out.append(scores)
+        if not qids:
+            return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
+        return pd.DataFrame({
+            "query_id": np.concatenate(qids),
+            "doc_id": np.concatenate(docs_out),
+            "score": np.concatenate(scores_out),
+        })
 
-        weighted = []
-        gmasks: list[int] = []
-        shard_mask = 0
-        for term, t in term_map.items():
-            if term_stats is not None:
-                mult, df_ = float(term_stats[term][0]), int(term_stats[term][1])
-            else:
-                mult, df_ = t["row_mult"], t["row_df"]
-            weighted.append((mult * bm25_idf(n_docs, df_), t))
-            gm = term_gmask.get(term, 0) if term_gmask else 0
-            gmasks.append(gm)
-            shard_mask |= gm
-        if not weighted or (require_n > 0 and len(weighted) < require_n):
-            # conjunctive: postings are doc-sharded, so a query term with
-            # no postings in this shard rules out every doc in it
-            return pd.DataFrame({"doc_id": [], "score": []})
-        if full_mask and (shard_mask & full_mask) != full_mask:
-            # a required group has no postings at all in this shard
-            return pd.DataFrame({"doc_id": [], "score": []})
-        docs, scores = _wand_sweep(
-            weighted, k, base, avgdl, counters, require_n, excl_docs,
-            incl_docs, gmasks if full_mask else None, full_mask, after,
-        )
-        return pd.DataFrame({"doc_id": docs, "score": scores})
-
-    def wrapped(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        return kernel(pdf)
-
-    return wrapped
+    return kernel
 
 
 def make_wand_batch_kernel(
@@ -4804,72 +4727,21 @@ def make_wand_batch_kernel(
     per_query_excl: dict[int, frozenset[str]] | None = None,
     dead_bcast=None,
 ):
-    """Batch variant: score MANY queries in one per-shard kernel pass.
-
-    ``per_query``: {query_id: {term: (mult, df)}}. All queries share one
-    term table per shard — a term common to several queries is decoded
-    ONCE (the caches hold weight-free base scores; each query applies its
-    own mult*idf weight), and the whole batch costs a single Spark job,
-    amortizing the per-query scheduling floor across the batch. Emits
-    (query_id, doc_id, score) local top-k rows per shard.
-    ``conjunctive``: AND semantics per query (the caller guarantees each
-    per_query entry holds that query's FULL distinct term set — queries
-    with a corpus-absent term never reach the kernel).
-    """
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
-        shard_id = int(pdf["shard_id"].iloc[0])
-        base = shard_id * shard_size
-        term_map = _parse_term_rows(pdf, base, counters)
-
-        qids: list[np.ndarray] = []
-        docs_out: list[np.ndarray] = []
-        scores_out: list[np.ndarray] = []
-        for qid in sorted(per_query):
-            require_n = len(per_query[qid]) if conjunctive else 0
-            weighted = [
-                (float(m) * bm25_idf(n_docs, int(df_)), term_map[t])
-                for t, (m, df_) in per_query[qid].items()
-                if t in term_map
-            ]
-            if not weighted or (require_n > 0 and len(weighted) < require_n):
-                continue
-            excl_docs = None
-            if per_query_excl and qid in per_query_excl:
-                # get, not pop: an exclusion term here may be another
-                # query's scoring term; doc-id decode reuses the shared
-                # per-term cache either way
-                arrs = [
-                    _decode_doc_ids(t, base, counters)
-                    for term in sorted(per_query_excl[qid])
-                    if (t := term_map.get(term)) is not None
-                ]
-                if arrs:
-                    excl_docs = np.unique(np.concatenate(arrs))
-            if dead_bcast is not None:
-                excl_docs = _merge_dead(
-                    excl_docs, dead_bcast.value, base, shard_size
-                )
-            docs, scores = _wand_sweep(
-                weighted, k, base, avgdl, counters, require_n, excl_docs
-            )
-            if len(docs):
-                qids.append(np.full(len(docs), qid, dtype=np.int32))
-                docs_out.append(docs)
-                scores_out.append(scores)
-        if not docs_out:
-            return pd.DataFrame({"query_id": [], "doc_id": [], "score": []})
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(qids),
-                "doc_id": np.concatenate(docs_out),
-                "score": np.concatenate(scores_out),
-            }
+    """Batch variant of :func:`make_wand_kernel`: ``per_query`` is
+    {query_id: {term: (mult, df)}}, ``per_query_excl`` each query's NOT
+    terms; ``conjunctive`` is AND per query (each entry must hold that
+    query's FULL distinct term set). See :func:`_batch_kernel`."""
+    excl = per_query_excl or {}
+    specs = {
+        qid: QuerySpec(
+            {t: m for t, (m, _df) in pq.items()},
+            frozenset(excl.get(qid, ())),
+            len(pq) if conjunctive else 0,
+            k=k,
         )
-
-    def wrapped(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        return kernel(pdf)
-
-    return wrapped
+        for qid, pq in per_query.items()
+    }
+    df = {t: d for pq in per_query.values() for t, (_m, d) in pq.items()}
+    return _batch_kernel(
+        specs, df, n_docs, avgdl, shard_size, dead_bcast, counters
+    )

@@ -514,3 +514,42 @@ def test_collapse_plan_partial_aggregates(spark, small_index):
     assert "Window" not in plan
     # the docs-side scan reads only the key and the collapse column
     assert_plan(df, "ReadSchema: struct<doc_id:bigint,lang:string>")
+
+
+def test_warm_query_job_counts(spark, small_index, tmp_path):
+    """Jobs scheduled per warm call, counted with the status tracker: the
+    fixed per-job cost dominates serving latency at this scale, so the
+    warm WAND search, the batch search and the federated search (two
+    snapshots, each hydrating its own top-k) are each pinned at the job
+    count they schedule today."""
+    import shutil
+
+    from fts_engine_spark.federated import FederatedFtsIndex
+
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs(run) -> int:
+        run()  # warm-up: cache population and first-use fetches
+        before = set(tracker.getJobIdsForGroup(None) or [])
+        run()
+        return len(set(tracker.getJobIdsForGroup(None) or []) - before)
+
+    index_dir, _ = small_index
+    fts = FtsIndex(spark, index_dir).warm()
+    # two snapshots of one index: the job count depends on the plan, not
+    # on which documents each snapshot holds
+    dirs = [str(tmp_path / f"snap{i}") for i in range(2)]
+    for d in dirs:
+        shutil.copytree(index_dir, d)
+    fed = FederatedFtsIndex(spark, dirs).warm()
+    try:
+        assert jobs(lambda: fts.search_bm25("turtle hotel", k=5).collect()) == 1
+        assert jobs(lambda: fts.search_bm25_batch(
+            ["turtle hotel", "french", "hotel -turtle"], k=5
+        ).collect()) == 2
+        assert jobs(lambda: fed.search_bm25("turtle hotel", k=5).collect()) == 5
+    finally:
+        for ix in [fts, *fed.subs]:
+            ix._postings_df.unpersist()
+            if ix._terms_df is not None:
+                ix._terms_df.unpersist()

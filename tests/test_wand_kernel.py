@@ -684,3 +684,44 @@ def test_cursor_pages_tile_full_ordering_property():
             assert abs(sa - sb) < 1e-12
 
     check()
+
+
+def test_summation_order_is_term_order_not_row_order():
+    """Per-doc contributions are summed in ascending term order whatever
+    order the posting rows arrive in or the query lists its terms: the
+    batch kernel (query-word order) and the single kernel over shuffled
+    rows must equal the term-sorted single kernel BIT FOR BIT — float
+    addition is not associative, so any other order changes late bits of
+    docs matching three or more terms."""
+    from fts_engine_spark.query import make_wand_batch_kernel
+
+    rng = np.random.default_rng(11)
+    n = 2_400
+    dls_all = rng.integers(20, 300, size=n).astype(np.int64)
+    avgdl = float(dls_all.mean())
+    terms = ["delta", "alpha", "charlie", "bravo"]  # query-word order
+    per_term = {}
+    for i, t in enumerate(terms):
+        docs = np.sort(rng.choice(n, size=900, replace=False))
+        tfs = rng.integers(1, 30, size=900)
+        per_term[t] = make_posting_row(
+            t, docs, tfs, dls_all[docs], mult=1 + i % 2, df=900
+        )
+
+    def scores(out):
+        return dict(zip(out["doc_id"].astype(int), out["score"].astype(float)))
+
+    sorted_rows = [per_term[t] for t in sorted(terms)]
+    want = scores(
+        make_wand_kernel(n, SHARD_SIZE, avgdl, 0)(None, pd.DataFrame(sorted_rows))
+    )
+    assert len(want) > 1_500
+
+    per_query = {0: {t: (per_term[t]["mult"], 900) for t in terms}}
+    batch = make_wand_batch_kernel(n, SHARD_SIZE, avgdl, 0, per_query)
+    assert scores(batch(None, pd.DataFrame(sorted_rows))) == want
+
+    kernel = make_wand_kernel(n, SHARD_SIZE, avgdl, 0)
+    for perm in ([3, 2, 1, 0], [1, 3, 0, 2], [2, 0, 3, 1]):
+        rows = [sorted_rows[i] for i in perm]
+        assert scores(kernel(None, pd.DataFrame(rows))) == want, perm
